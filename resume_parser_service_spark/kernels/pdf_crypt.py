@@ -217,6 +217,14 @@ def _decrypt_block(rks: list[list[int]], block: bytes) -> bytes:
     return bytes(state)
 
 
+def _fast_aes(key: bytes) -> bool:
+    """Whether to use the library AES: only for the key sizes the
+    pure-Python path accepts (``_expand_key``: 16/32 bytes, the sizes
+    ISO 32000 uses), so a 24-byte key fails the same way whether or
+    not ``cryptography`` is installed."""
+    return _HAVE_FAST_CRYPTO and len(key) in (16, 32)
+
+
 def aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes,
                     pad: bool = True) -> bytes:
     """AES-CBC. With ``pad`` applies PKCS#7 (ISO 32000-1 §7.6.2 block
@@ -226,7 +234,7 @@ def aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes,
         data = data + bytes([n]) * n
     elif len(data) % 16:
         raise CryptError("unpadded AES input not block-aligned")
-    if _HAVE_FAST_CRYPTO:
+    if _fast_aes(key):
         enc = _Cipher(_calg.AES(key), _cmodes.CBC(iv)).encryptor()
         return enc.update(data) + enc.finalize()
     rks = _expand_key(key)
@@ -244,7 +252,7 @@ def aes_cbc_decrypt(key: bytes, iv: bytes, data: bytes,
     if len(data) % 16:
         # tolerate trailing slack bytes (crawled PDFs): drop them
         data = data[:len(data) - len(data) % 16]
-    if _HAVE_FAST_CRYPTO:
+    if _fast_aes(key):
         dec = _Cipher(_calg.AES(key), _cmodes.CBC(iv)).decryptor()
         out = bytearray(dec.update(data) + dec.finalize())
     else:

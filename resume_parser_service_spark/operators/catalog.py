@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -263,10 +264,17 @@ def _shingle_rows_pandas(docs: DataFrame, n: int = 5,
         .mapInPandas(kernel, schema="doc_id long, shingle long")
 
 
+class ShingleBase(NamedTuple):
+    """The distinct shingle rows, the multi-doc group lists and the df
+    cap ``grp`` was filtered with."""
+    sh: DataFrame
+    grp: DataFrame
+    max_df: int
+
+
 def _shingle_base(spark: SparkSession, sf_dir: str, max_df: int = 100,
-                  checkpoint: bool = True
-                  ) -> tuple[DataFrame, DataFrame]:
-    """(sh, grp): the distinct shingle rows and the df-capped
+                  checkpoint: bool = True) -> ShingleBase:
+    """(sh, grp, max_df): the distinct shingle rows and the df-capped
     multi-doc group lists — the shared substrate of ``_capped_pairs``
     and ``dedup_clusters``' size gate (which needs ``grp`` before
     deciding whether to build pairs at all).
@@ -295,11 +303,11 @@ def _shingle_base(spark: SparkSession, sf_dir: str, max_df: int = 100,
            .where((F.size("ds") >= 2) & (F.size("ds") <= max_df)))
     if checkpoint:
         grp = grp.localCheckpoint(eager=True)
-    return sh, grp
+    return ShingleBase(sh, grp, max_df)
 
 
 def _capped_pairs(spark: SparkSession, sf_dir: str, max_df: int = 100,
-                  base: tuple[DataFrame, DataFrame] | None = None
+                  base: ShingleBase | None = None
                   ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(pairs, sizes, seeds) for the shared-shingle near-dup family:
     pairs = (doc_a < doc_b, n_shared) over shingles with document
@@ -322,9 +330,16 @@ def _capped_pairs(spark: SparkSession, sf_dir: str, max_df: int = 100,
     (the SQL reference paid three exchanges of the same rows: the
     DISTINCT, the df-count aggregation, and the self-join sides).
     Pairs then explode the a<b combinations of each (<= max_df) doc
-    list in-JVM and aggregate per pair."""
-    sh, grp = base if base is not None else \
-        _shingle_base(spark, sf_dir, max_df)
+    list in-JVM and aggregate per pair.
+
+    A ``base`` built with another df cap raises ``ValueError``: its
+    groups are already filtered, so ``max_df`` could not apply."""
+    if base is None:
+        base = _shingle_base(spark, sf_dir, max_df)
+    elif base.max_df != max_df:
+        raise ValueError(f"base was built with max_df={base.max_df}, "
+                         f"pairs asked for max_df={max_df}")
+    sh, grp = base.sh, base.grp
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     pair_expr = F.explode(F.flatten(F.transform(
         "ds",

@@ -154,7 +154,7 @@ def _q_dedup_clusters(spark: SparkSession, sf_dir: str,
     from .catalog import _capped_pairs, _shingle_base
     global LAST_ROUNDS
     base = _shingle_base(spark, sf_dir)
-    grp = base[1]
+    grp = base.grp
     n_members = int(grp.agg(F.sum(F.size("ds"))).collect()[0][0] or 0)
     if n_members <= LOCAL_CC_MAX_MEMBERS:
         # Small-graph fast path: one union-find task over the group

@@ -4,6 +4,16 @@ Local testing runs ``local[N]``; the same configs apply unchanged on a
 multi-executor cluster via ``spark-submit --py-files`` (north rule).
 AQE handles runtime re-planning and skew joins; Arrow batches are kept
 small because ``html`` rows can be up to 10 MB (SURVEY.md §7 risk 3).
+
+On ``local[...]`` masters the Python workers are started through
+``worker_daemon`` (``spark.python.daemon.module``): the stock daemon's
+workers re-read ``pyspark.zip``'s directory at the start of every task,
+a fixed ~0.25 CPU-s per task whatever its input. The daemon is launched
+before any ``--py-files`` archive reaches the worker, so
+``spark.executorEnv.PYTHONPATH`` is pointed at the directory or zip
+this package was imported from (merged with a caller's value). Other
+masters keep the stock daemon: their executors need not see the
+driver's paths.
 """
 
 from __future__ import annotations
@@ -13,6 +23,8 @@ import os
 from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "stop_spark"]
+
+_WORKER_PATH = "spark.executorEnv.PYTHONPATH"
 
 
 def get_spark(app_name: str = "resume-parser-service-spark",
@@ -59,7 +71,16 @@ def get_spark(app_name: str = "resume-parser-service-spark",
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    if master.startswith("local"):
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        user_path = extra_conf.pop(_WORKER_PATH, "")
+        builder = (
+            builder.config("spark.python.daemon.module",
+                           "resume_parser_service_spark.worker_daemon")
+            .config(_WORKER_PATH,
+                    os.pathsep.join(p for p in (root, user_path) if p)))
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

@@ -172,3 +172,27 @@ def test_local_union_find_agrees_with_loop(spark, monkeypatch):
               for r in cl._q_dedup_clusters(spark, sf, strict=True).collect()}
     assert cl.LAST_ROUNDS and cl.LAST_ROUNDS > 0
     assert local == looped
+
+
+def test_capped_pairs_base_carries_its_df_cap(spark, tmp_path):
+    """A prebuilt base fixes the df cap: asking its pairs for another
+    cap fails loudly instead of silently keeping the base's."""
+    from resume_parser_service_spark.operators.catalog import (
+        _REGISTERED, _capped_pairs, _shingle_base, register_views)
+    hot = "copyright footer all rights reserved"  # df = 12
+    rows = [(i, f"unique{i} words here {hot}") for i in range(12)]
+    sf_dir = _write_docs(spark, tmp_path, rows)
+    _REGISTERED.pop(id(spark), None)
+    register_views(spark, sf_dir)
+    try:
+        base = _shingle_base(spark, sf_dir, max_df=5, checkpoint=False)
+        assert base.max_df == 5
+        with pytest.raises(ValueError, match="max_df=5"):
+            _capped_pairs(spark, sf_dir, max_df=100, base=base)
+        pairs, _sizes, _seeds = _capped_pairs(spark, sf_dir, max_df=5,
+                                              base=base)
+        assert pairs.count() == 0  # the hot shingle is over the cap
+        pairs, _sizes, _seeds = _capped_pairs(spark, sf_dir, max_df=20)
+        assert pairs.count() == 12 * 11 // 2
+    finally:
+        _REGISTERED.pop(id(spark), None)

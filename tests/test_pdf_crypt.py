@@ -69,6 +69,18 @@ def test_cbc_roundtrip_and_padding():
         aes_cbc_encrypt(key, iv, b"x" * 20, pad=False)
 
 
+@pytest.mark.parametrize("fast", [False, True])
+def test_aes_24_byte_key_rejected_on_both_paths(monkeypatch, fast):
+    """The library AES would take a 24-byte key, the pure-Python path
+    does not: the outcome must not depend on which one is installed."""
+    monkeypatch.setattr(pc, "_HAVE_FAST_CRYPTO", fast)
+    key, iv = bytes(range(24)), b"\x01" * 16
+    with pytest.raises(CryptError, match="bad AES key length 24"):
+        aes_cbc_encrypt(key, iv, b"x" * 20)
+    with pytest.raises(CryptError, match="bad AES key length 24"):
+        aes_cbc_decrypt(key, iv, b"y" * 32)
+
+
 # ---------------------------------------------------------- round-trips
 
 @pytest.mark.parametrize("mode", sorted(MODES))
