@@ -37,6 +37,8 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..kernels.shingle import hash60, shingles
+
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
@@ -225,43 +227,77 @@ ORDER BY s.doc_a, s.doc_b
 """
 
 
-def _shingle_rows_pandas(docs: DataFrame, n: int = 5,
-                         id_col: str = "doc_id",
-                         text_col: str = "text") -> DataFrame:
-    """Distinct (doc_id, hash60(5-gram)) rows via a per-doc Python set
-    in ``mapInPandas`` — the vectorized twin of ``_capped_shingles_cte``'s
-    ``sh`` CTE (optimization guide §4.2). hashlib.md5 over the UTF-8
-    shingle reproduces the SQL ``hash60`` bit-for-bit, and the per-doc
-    set IS the global DISTINCT (doc_id is part of the key), so the
-    exchange the SQL formulation paid for dedup disappears: this is a
-    pure map stage. Measured at sf1.0: the JVM expression chain
-    (concat_ws -> md5 -> conv -> substring per shingle) cost ~3.4 s for
-    2.5M shingles; this kernel ~0.4 s."""
-    import hashlib
+def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """Round-robin repartition before a CPU-bound Python kernel —
+    GATED on the scan actually being under-split.
 
+    The small-SF ``documents`` parquet is one file under
+    ``maxPartitionBytes``, so without the exchange the whole
+    mapInPandas stage runs on ONE core (measured: rasterize_pages
+    48.9 s serial vs the sub-10 s spread shape at sf0.1). At 100 TB the
+    scan has thousands of natural splits that already cover every core
+    — there the exchange of (doc_id, text) rows is pure cost, so it is
+    only paid when the planned scan yields fewer partitions than the
+    cluster has slots (same pattern as the product pipeline's gated
+    ``salt_input=``). ``df.rdd.getNumPartitions()`` is plan-time only —
+    no job runs.
+
+    Residual (accepted): the gate counts splits, not balance. A scan
+    with >= slots partitions where one holds most ROWS skips the
+    exchange and runs lopsided. At scale ``maxPartitionBytes`` bounds
+    per-partition BYTES — a fat file surfaces as MORE partitions, not
+    fatter ones — so the exposure is the small-corpus case of many
+    tiny files plus one mid-size (sub-``maxPartitionBytes``) file,
+    whose serial tail is itself bounded by that byte cap. Skewed
+    per-row COST (not size) is what the product pipeline's
+    ``salt_input=`` exists for."""
+    slots = spark.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= slots:
+        return df
+    return df.repartition(slots * 2)
+
+
+def _doc_rows(docs: DataFrame, rows: Callable, cols: str,
+              id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """``(id_col, *cols)`` rows from a per-document Python function.
+    ``rows(text)`` returns the document's values as one equal-length
+    sequence per column of ``cols`` (a DDL list of bigint / int /
+    string columns); the id passes through with its own type (bigint
+    ``doc_id`` in the catalog, url strings on the index and export
+    paths).
+
+    This is how the shingle family (``kernels/shingle.py``) runs: one
+    ``mapInPandas`` map stage (optimization guide §4.2). hashlib.md5
+    over the UTF-8 shingle beats the per-shingle JVM
+    concat_ws -> md5 -> conv -> substring chain ~8x (sf1.0: ~3.4 s vs
+    ~0.4 s for 2.5M shingles), and a per-document set IS the global
+    DISTINCT (the id is in the key), so the exchange the SQL
+    formulations pay for it disappears. Columns are built as typed
+    lists, not row tuples: per-row tuples through
+    ``DataFrame.from_records`` cost ~35% more kernel CPU. Callers
+    spread an under-split scan with ``_spread`` first."""
     import pandas as pd
+
+    fields = [(id_col, dict(docs.dtypes)[id_col])] + [
+        tuple(c.split()) for c in cols.split(",")]
+    pd_types = {"bigint": "int64", "int": "int32"}
+    dtypes = [pd_types.get(t, "object") for _, t in fields]
 
     def kernel(batches):
         for pdf in batches:
-            ids: list[int] = []
-            hs: list[int] = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                toks = ("" if text is None else text).split(" ")
-                m = len(toks) - n + 1
-                if m <= 0:
-                    continue
-                seen = {
-                    int(hashlib.md5(
-                        " ".join(toks[i:i + n]).encode()).hexdigest()[:15],
-                        16)
-                    for i in range(m)}
-                ids.extend([doc_id] * len(seen))
-                hs.extend(seen)
-            yield pd.DataFrame({"doc_id": pd.Series(ids, dtype="int64"),
-                                "shingle": pd.Series(hs, dtype="int64")})
+            ids: list = []
+            out: list[list] = [[] for _ in fields[1:]]
+            for i, text in zip(pdf[id_col], pdf[text_col]):
+                vals = rows(text)
+                ids += [i] * len(vals[0])
+                for col, v in zip(out, vals):
+                    col += v
+            yield pd.DataFrame({
+                name: pd.Series(col, dtype=dt)
+                for (name, _), col, dt in zip(fields, [ids, *out], dtypes)})
 
-    return docs.select(F.col(id_col).alias(id_col), text_col) \
-        .mapInPandas(kernel, schema="doc_id long, shingle long")
+    return docs.select(id_col, text_col).mapInPandas(
+        kernel, schema=", ".join(f"{n} {t}" for n, t in fields))
 
 
 class ShingleBase(NamedTuple):
@@ -287,13 +323,10 @@ def _shingle_base(spark: SparkSession, sf_dir: str, max_df: int = 100,
     duplicated per consumer (a cheap map) but the whole query
     pipelines as ONE job with no synchronization barriers — measured
     ~15% faster at sf1.0."""
-    docs = spark.table("documents")
-    sh = _shingle_rows_pandas(docs)
-    slots = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < slots:
-        # under-split scan (small-SF single file): spread the CPU-bound
-        # kernel over every slot — same gate as extract_queries._spread
-        sh = _shingle_rows_pandas(docs.repartition(slots * 2))
+    sh = _doc_rows(
+        _spread(spark, spark.table("documents")),
+        lambda t: ({hash60(s.encode()) for s in shingles(t, 5)},),
+        "shingle bigint")
     if checkpoint:
         sh = sh.localCheckpoint(eager=True)
     # filter BEFORE any checkpoint: the frame shrinks to the multi-doc
@@ -572,8 +605,6 @@ def _q_embedding_neardup_pandas(spark: SparkSession, sf_dir: str,
     semantics, including NaN ordering for zero-norm pairs (the pandas
     stage pre-filters with a small margin and keeps non-finite ratios,
     so no qualifying pair is dropped)."""
-    import hashlib as _hl
-
     import numpy as np
     import pandas as pd
     from pyspark.sql import functions as F
@@ -587,8 +618,7 @@ def _q_embedding_neardup_pandas(spark: SparkSession, sf_dir: str,
         w = np.empty((dmax, n_planes), dtype=np.float64)
         for p in range(n_planes):
             for i in range(dmax):
-                h = int(_hl.md5(f"{p}#{i}".encode()).hexdigest()[:15], 16)
-                w[i, p] = h % 1001 - 500
+                w[i, p] = hash60(f"{p}#{i}".encode()) % 1001 - 500
         return w
 
     def _matrix(col, dmax: int) -> "np.ndarray":

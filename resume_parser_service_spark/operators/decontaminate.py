@@ -10,9 +10,11 @@ stay meaningful.
 Scale shape: the EVAL side is tiny (thousands of documents) next to the
 100 TB corpus — its distinct shingle set is broadcast, the corpus side
 streams through a map-side hash join, and NO corpus shuffle happens
-before the distinct-doc aggregation of the (rare) collisions. The
-corpus shingles come from the same zero-shuffle array-slicing builder
-as the dedup operators (``catalog._shingle_rel``).
+before the distinct-doc aggregation of the (rare) collisions. Both
+shingle sets come from the dedup operators' per-document map
+(``kernels/shingle.py`` through ``catalog._doc_rows``): the per-doc set
+is the DISTINCT, so no exchange is paid for it. ``_shingle_rel`` builds
+the same shingles for the SQL reference.
 """
 
 from __future__ import annotations
@@ -20,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import _shingle_rel
+from ..kernels.shingle import shingles
+from .catalog import _doc_rows, _shingle_rel, _spread
 
 __all__ = ["contaminated_docs_sql", "contaminated_docs"]
 
@@ -48,47 +51,18 @@ ORDER BY c.doc_id
 """
 
 
-def _shingle_strings_pandas(docs: DataFrame, n: int) -> DataFrame:
-    """Distinct (doc_id, n-gram STRING) rows via a per-doc Python set
-    in ``mapInPandas`` (guide §4.2) — the vectorized twin of
-    ``SELECT DISTINCT doc_id, shingle FROM (_shingle_rel(...))``.
-    The per-doc set IS the global DISTINCT (doc_id is in the key), so
-    this is a pure map stage: the exchange the SQL paid for dedup is
-    gone. Shingles stay STRINGS so the join semantics (and the DuckDB
-    oracle) are untouched — no hash-collision exposure."""
-    import pandas as pd
-
-    def kernel(batches):
-        for pdf in batches:
-            ids: list[int] = []
-            shs: list[str] = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = ("" if text is None else text).split(" ")
-                m = len(toks) - n + 1
-                if m <= 0:
-                    continue
-                seen = {" ".join(toks[i:i + n]) for i in range(m)}
-                ids.extend([doc_id] * len(seen))
-                shs.extend(seen)
-            yield pd.DataFrame({"doc_id": pd.Series(ids, dtype="int64"),
-                                "shingle": pd.Series(shs, dtype="object")})
-
-    return docs.select("doc_id", "text").mapInPandas(
-        kernel, schema="doc_id long, shingle string")
-
-
 def contaminated_docs(spark: SparkSession, corpus: DataFrame,
                       eval_docs: DataFrame, n: int = 8) -> DataFrame:
     """(doc_id, n_hits) for corpus docs colliding with the eval set.
     The eval shingle set is explicitly broadcast — the corpus never
-    shuffles (and since r6 never pays a DISTINCT exchange either:
-    both shingle sets come from the per-doc-set pandas kernel)."""
-    slots = spark.sparkContext.defaultParallelism
-    if corpus.rdd.getNumPartitions() < slots:
-        # spread the CPU-bound kernel when the scan is under-split
-        corpus = corpus.repartition(slots * 2)
-    corpus_sh = _shingle_strings_pandas(corpus, n)
-    eval_sh = _shingle_strings_pandas(eval_docs, n) \
+    shuffles and pays no DISTINCT exchange (its shingle rows are
+    per-doc sets). Shingles stay STRINGS, so the join has no
+    hash-collision exposure."""
+    def rows(text):
+        return (set(shingles(text, n)),)
+
+    corpus_sh = _doc_rows(_spread(spark, corpus), rows, "shingle string")
+    eval_sh = _doc_rows(eval_docs, rows, "shingle string") \
         .select("shingle").distinct()
     return (corpus_sh.join(F.broadcast(eval_sh), "shingle")
             .groupBy("doc_id")

@@ -27,7 +27,7 @@ from ..kernels.html_text import extract_html
 from ..kernels.pdf_gen import make_pdf
 from ..kernels.pdf_text import extract_pdf
 from ..kernels.resume_map import map_resume
-from .catalog import register_views
+from .catalog import _spread, register_views
 
 __all__ = ["extract_queries", "extract_oracles"]
 
@@ -112,36 +112,6 @@ def _pdf_roundtrip_kernel(batches: Iterator) -> Iterator:
                 data = encrypt_pdf(data, mode)
             outs.append(extract_pdf(data)["text"])
         yield pd.DataFrame({"doc_id": pdf["doc_id"], "extracted": outs})
-
-
-def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Round-robin repartition before a CPU-bound Python kernel —
-    GATED on the scan actually being under-split.
-
-    The small-SF ``documents`` parquet is one file under
-    ``maxPartitionBytes``, so without the exchange the whole
-    mapInPandas stage runs on ONE core (measured: rasterize_pages
-    48.9 s serial vs the sub-10 s spread shape at sf0.1). At 100 TB the
-    scan has thousands of natural splits that already cover every core
-    — there the exchange of (doc_id, text) rows is pure cost, so it is
-    only paid when the planned scan yields fewer partitions than the
-    cluster has slots (same pattern as the product pipeline's gated
-    ``salt_input=``). ``df.rdd.getNumPartitions()`` is plan-time only —
-    no job runs.
-
-    Residual (accepted): the gate counts splits, not balance. A scan
-    with >= slots partitions where one holds most ROWS skips the
-    exchange and runs lopsided. At scale ``maxPartitionBytes`` bounds
-    per-partition BYTES — a fat file surfaces as MORE partitions, not
-    fatter ones — so the exposure is the small-corpus case of many
-    tiny files plus one mid-size (sub-``maxPartitionBytes``) file,
-    whose serial tail is itself bounded by that byte cap. Skewed
-    per-row COST (not size) is what the product pipeline's
-    ``salt_input=`` exists for."""
-    slots = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= slots:
-        return df
-    return df.repartition(slots * 2)
 
 
 def _q_extract_html_identity(spark: SparkSession, sf_dir: str) -> DataFrame:

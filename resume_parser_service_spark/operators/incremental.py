@@ -33,7 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import _hash60, _shingle_rel
+from ..kernels.shingle import hash60, minhash, shingles
+from .catalog import _doc_rows, _hash60, _shingle_rel, _spread
 
 __all__ = ["band_signatures_sql", "band_signatures",
            "match_against_index", "split_batch"]
@@ -76,66 +77,33 @@ def band_signatures(spark: SparkSession, docs: DataFrame,
                     n_hashes: int = 8, rows_per_band: int = 2) -> DataFrame:
     """Band signatures for an arbitrary (doc_id, text) DataFrame.
 
-    r6: computed in ONE vectorized map stage (optimization guide §4.2)
-    — per doc the Python kernel builds the distinct shingle set, takes
-    the ``n_hashes`` seeded MinHash minima with hashlib.md5 (bit-
-    identical to the SQL ``hash60``) and folds them into band hashes.
-    The SQL formulation (``band_signatures_sql``, kept as the
-    executable reference and DuckDB oracle source) paid a DISTINCT
-    exchange, a per-doc aggregation exchange, and ~n_hashes JVM
-    md5-expression evaluations per shingle fanned out across
-    ``n_bands`` inlined union branches; this kernel pays zero
-    exchanges before the final ordering (measured 4.3 s -> sub-second
-    at sf1.0)."""
-    import hashlib
-
-    import pandas as pd
-
+    One map stage (``catalog._doc_rows``): per doc the distinct
+    shingle set, its ``n_hashes`` seeded MinHash minima
+    (``kernels.shingle.minhash``) folded into band hashes. The SQL
+    formulation (``band_signatures_sql``, kept as the executable
+    reference and DuckDB oracle source) paid a DISTINCT exchange, a
+    per-doc aggregation exchange, and ~n_hashes JVM md5-expression
+    evaluations per shingle fanned out across ``n_bands`` inlined union
+    branches; this pays zero exchanges before the final ordering
+    (measured 4.3 s -> sub-second at sf1.0)."""
     if n_hashes % rows_per_band:
         raise ValueError("n_hashes must divide into bands evenly")
-    n_bands = n_hashes // rows_per_band
     seeds = [f"s{i}#".encode() for i in range(n_hashes)]
 
-    # doc_id passes through untouched — the index path keys on URL
-    # strings, the catalog query on bigint doc_ids
-    id_sql_type = dict(docs.dtypes)["doc_id"]
-    id_dtype = "object" if id_sql_type == "string" else "int64"
+    def rows(text):
+        sh = {s.encode() for s in shingles(text, 5)}
+        if not sh:
+            return (), ()
+        mins = [str(m) for m in minhash(sh, seeds)]
+        bands = ["#".join(mins[lo:lo + rows_per_band])
+                 for lo in range(0, n_hashes, rows_per_band)]
+        return (range(len(bands)),
+                [hash60(f"b{b}#{parts}".encode())
+                 for b, parts in enumerate(bands)])
 
-    def kernel(batches):
-        md5 = hashlib.md5
-        for pdf in batches:
-            ids: list = []
-            bids: list[int] = []
-            bhs: list[int] = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = ("" if text is None else text).split(" ")
-                m = len(toks) - 4
-                if m <= 0:
-                    continue
-                sh = {" ".join(toks[i:i + 5]).encode() for i in range(m)}
-                mins = [min(int(md5(seed + s).hexdigest()[:15], 16)
-                            for s in sh) for seed in seeds]
-                for b in range(n_bands):
-                    parts = "#".join(
-                        str(mins[b * rows_per_band + r])
-                        for r in range(rows_per_band))
-                    ids.append(doc_id)
-                    bids.append(b)
-                    bhs.append(int(md5(f"b{b}#{parts}".encode())
-                                   .hexdigest()[:15], 16))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype=id_dtype),
-                "band_id": pd.Series(bids, dtype="int32"),
-                "band_hash": pd.Series(bhs, dtype="int64")})
-
-    src = docs.select("doc_id", "text")
-    slots = spark.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < slots:
-        src = src.repartition(slots * 2)
-    return (src.mapInPandas(
-        kernel,
-        schema=f"doc_id {id_sql_type}, band_id int, band_hash long")
-        .orderBy("doc_id", "band_id"))
+    return (_doc_rows(_spread(spark, docs), rows,
+                      "band_id int, band_hash bigint")
+            .orderBy("doc_id", "band_id"))
 
 
 def _collisions(new_bands: DataFrame,

@@ -30,7 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import _hash60, _tokens, register_views
+from ..kernels.shingle import hash60, shingles
+from .catalog import _doc_rows, _hash60, _spread, _tokens, register_views
 
 __all__ = ["repeated_spans_sql", "repeated_spans", "drop_repeated_spans"]
 
@@ -94,44 +95,6 @@ ORDER BY {id_col}, span_start
 """
 
 
-def _pos_rows_pandas(docs: DataFrame, n: int, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
-    """(id, pos, hash60(n-gram at pos)) rows via a Python kernel — the
-    vectorized twin of the SQL ``pos_sh`` CTE (guide §4.2: hashlib.md5
-    beats the per-shingle JVM concat_ws->md5->conv expression chain
-    ~8x, and the kernel is a pure map stage)."""
-    import hashlib
-
-    import pandas as pd
-
-    # id passes through untouched — the catalog query keys on bigint
-    # doc_ids, drop_repeated_spans on url strings
-    id_sql_type = dict(docs.dtypes)[id_col]
-    id_dtype = "object" if id_sql_type == "string" else "int64"
-
-    def kernel(batches):
-        for pdf in batches:
-            ids: list = []
-            poss: list[int] = []
-            hs: list[int] = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                toks = ("" if text is None else text).split(" ")
-                m = len(toks) - n + 1
-                for i in range(m if m > 0 else 0):
-                    ids.append(doc_id)
-                    poss.append(i)
-                    hs.append(int(hashlib.md5(
-                        " ".join(toks[i:i + n]).encode()).hexdigest()[:15],
-                        16))
-            yield pd.DataFrame({
-                id_col: pd.Series(ids, dtype=id_dtype),
-                "pos": pd.Series(poss, dtype="int64"),
-                "h": pd.Series(hs, dtype="int64")})
-
-    return docs.select(id_col, text_col).mapInPandas(
-        kernel, schema=f"{id_col} {id_sql_type}, pos long, h long")
-
-
 def _spans_frame(docs: DataFrame, n: int, id_col: str = "doc_id",
                  text_col: str = "text") -> DataFrame:
     """Merged repeated-span intervals for ``min_df=2`` — identical rows
@@ -140,17 +103,15 @@ def _spans_frame(docs: DataFrame, n: int, id_col: str = "doc_id",
     ``count(DISTINCT doc) >= 2`` is exactly ``min(doc) != max(doc)``
     over the hash partition, so one window pass replaces the SQL's
     groupBy(h) + join back (which re-shuffled the position stream);
-    the kernel above replaces the JVM md5 expression chain."""
+    the (id, pos, hash60) rows come from ``catalog._doc_rows``."""
     from pyspark.sql.window import Window
 
-    spark = docs.sparkSession
-    pos = _pos_rows_pandas(docs, n, id_col, text_col)
-    slots = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < slots:
-        # spread the CPU-bound kernel when the scan is under-split
-        # (same gate as extract_queries._spread)
-        pos = _pos_rows_pandas(docs.repartition(slots * 2), n,
-                               id_col, text_col)
+    def rows(text):
+        hs = [hash60(s.encode()) for s in shingles(text, n)]
+        return range(len(hs)), hs
+
+    pos = _doc_rows(_spread(docs.sparkSession, docs), rows,
+                    "pos bigint, h bigint", id_col, text_col)
     wh = Window.partitionBy("h")
     flagged = (pos
                .withColumn("_mn", F.min(id_col).over(wh))

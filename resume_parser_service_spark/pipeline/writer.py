@@ -23,6 +23,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..kernels.shingle import hash60
 from . import manifests as _manifests
 
 __all__ = ["SnapshotTable", "SnapshotConflictError"]
@@ -31,13 +32,6 @@ __all__ = ["SnapshotTable", "SnapshotConflictError"]
 class SnapshotConflictError(RuntimeError):
     """Two writers raced to the same snapshot id; the loser raises
     instead of clobbering (optimistic concurrency, Iceberg-style)."""
-
-
-def _hash60_py(s: str) -> int:
-    """Python twin of functions.hash60 (first 15 hex digits of md5) —
-    lets the driver compute a row's bucket without a Spark job."""
-    import hashlib
-    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
 
 class SnapshotTable:
@@ -439,7 +433,8 @@ class SnapshotTable:
         read as the last resort. Returns None for an empty prune."""
         ops = self._evolution()  # loaded ONCE per lookup
         if self.buckets:
-            b = _hash60_py(key) % self.buckets
+            # functions.hash60 in Python: the bucket without a Spark job
+            b = hash60(key.encode("utf-8")) % self.buckets
             found = [(s, os.path.join(self.root, s["path"], f"_bucket={b}"))
                      for s in self.live_snapshots()]
             found = [(s, p) for s, p in found if os.path.exists(p)]

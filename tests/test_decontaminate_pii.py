@@ -69,6 +69,12 @@ def test_contamination_duckdb_parity(spark, corpus_and_eval):
     assert list(sdf["doc_id"]) == list(odf["doc_id"])
     assert list(sdf["n_hits"].astype("int64")) == \
         list(odf["n_hits"].astype("int64"))
+    # the per-document shingle path (what bench.py and the benchmark run)
+    pdf = decontaminate.contaminated_docs(spark, corpus, eval_docs,
+                                          n=8).toPandas()
+    assert list(pdf["doc_id"]) == list(odf["doc_id"])
+    assert list(pdf["n_hits"].astype("int64")) == \
+        list(odf["n_hits"].astype("int64"))
 
 
 def test_pii_scrub_column_and_sql_parity(spark):

@@ -24,11 +24,21 @@ def docs(spark):
 
 
 def test_hash60_matches_duckdb(spark):
+    """The Column hash60, the Python kernels.shingle.hash60 and the
+    DuckDB oracle expression agree, incl. empty, non-ASCII UTF-8 and
+    double-space inputs."""
     import duckdb
-    df = spark.range(1).select(X.hash60(F.lit("tok")).alias("h"))
-    duck = duckdb.sql("select cast(concat('0x', substr(md5('tok'), 1, 15)) "
-                      "as bigint)").fetchall()[0][0]
-    assert df.collect()[0]["h"] == duck
+
+    from resume_parser_service_spark.kernels.shingle import hash60
+    strings = ["tok", "", "café über straße", "two  spaces"]
+    spark_h = dict(spark.createDataFrame([(s,) for s in strings], "s string")
+                   .select("s", X.hash60(F.col("s"))).collect())
+    for s in strings:
+        duck = duckdb.execute(
+            "select cast(concat('0x', substr(md5(?), 1, 15)) as bigint)",
+            [s]).fetchall()[0][0]
+        assert spark_h[s] == duck, s
+        assert hash60(s.encode("utf-8")) == duck, s
 
 
 def test_minhash_shape(docs):
