@@ -312,11 +312,11 @@ def _shingle_base(spark: SparkSession, sf_dir: str, max_df: int = 100,
                   checkpoint: bool = True) -> ShingleBase:
     """(sh, grp, max_df): the distinct shingle rows and the df-capped
     multi-doc group lists — the shared substrate of ``_capped_pairs``
-    and ``dedup_clusters``' size gate (which needs ``grp`` before
-    deciding whether to build pairs at all).
+    and ``dedup_clusters`` (whose size gate and connected components
+    both read ``grp``).
 
     ``checkpoint=True`` (the multi-action consumers: dedup_clusters
-    reads the gate metric, then seeds, then edges) eagerly
+    reads the gate metric, then the group lists) eagerly
     materializes both frames so the kernel and the corpus-wide
     aggregation run once. Single-action consumers
     (``ngram_jaccard_pairs``) pass False: the kernel subtree is then
@@ -341,16 +341,12 @@ def _shingle_base(spark: SparkSession, sf_dir: str, max_df: int = 100,
 
 def _capped_pairs(spark: SparkSession, sf_dir: str, max_df: int = 100,
                   base: ShingleBase | None = None
-                  ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(pairs, sizes, seeds) for the shared-shingle near-dup family:
-    pairs = (doc_a < doc_b, n_shared) over shingles with document
-    frequency <= ``max_df``; sizes = per-doc distinct-shingle counts;
-    seeds = (doc_id, min doc sharing any cold shingle) — a free 2-hop
-    label seed for ``dedup_clusters`` (min over each shingle group is
-    already known here). Shared by ``ngram_jaccard_pairs`` and
-    ``dedup_clusters``' edge builder, so the df-cap policy stays in
-    lockstep with ``_capped_shingles_cte`` (the SQL reference / oracle
-    source, which must emit identical rows).
+                  ) -> tuple[DataFrame, DataFrame]:
+    """(pairs, sizes) for ``ngram_jaccard_pairs``: pairs = (doc_a <
+    doc_b, n_shared) over shingles with document frequency <=
+    ``max_df``; sizes = per-doc distinct-shingle counts. The df-cap
+    policy stays in lockstep with ``_capped_shingles_cte`` (the SQL
+    reference / oracle source, which must emit identical rows).
 
     Shape (guide §2.3/§2.4): the shingle rows come from the pandas
     kernel above (pure map, no DISTINCT exchange, spread over the
@@ -383,12 +379,7 @@ def _capped_pairs(spark: SparkSession, sf_dir: str, max_df: int = 100,
              .groupBy(F.col("p.doc_a").alias("doc_a"),
                       F.col("p.doc_b").alias("doc_b"))
              .agg(F.count("*").alias("n_shared")))
-    # per-doc min over its cold shingle groups (ds is sorted, so the
-    # group min is ds[0]); every edge-touched doc appears in >= 1 group
-    seeds = (grp.select(F.col("ds").getItem(0).alias("mn"),
-                        F.explode("ds").alias("doc_id"))
-             .groupBy("doc_id").agg(F.min("mn").alias("cluster_id")))
-    return pairs, sizes, seeds
+    return pairs, sizes
 
 
 def _q_ngram_jaccard_pandas(spark: SparkSession, sf_dir: str,
@@ -397,7 +388,7 @@ def _q_ngram_jaccard_pandas(spark: SparkSession, sf_dir: str,
     to ``_ngram_jaccard_sql("spark")`` (the in-tree reference; DuckDB
     oracle unchanged)."""
     register_views(spark, sf_dir)
-    pairs, sizes, _seeds = _capped_pairs(
+    pairs, sizes = _capped_pairs(
         spark, sf_dir, max_df,
         base=_shingle_base(spark, sf_dir, max_df, checkpoint=False))
     sa = sizes.select(F.col("doc_id").alias("doc_a"),

@@ -66,9 +66,6 @@ def get_spark(app_name: str = "resume-parser-service-spark",
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.sql.session.timeZone", "UTC")
-        # reliable-checkpoint files (dedup_clusters lineage truncation)
-        # are GC'd with their frames instead of accumulating in /tmp
-        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.ui.enabled", "false")
     )
     extra_conf = dict(extra_conf or {})

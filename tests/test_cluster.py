@@ -1,27 +1,31 @@
 """Connected-components dedup clustering: convergence + guardrails.
 
-Min-label propagation with pointer jumping moves a label ~2^round
-chain hops per round, so planted chains of shared-shingle docs
-exercise the iteration depth directly; the non-convergence guard
-(VERDICT.md r1 item 4) and the LSSS fallback are covered here.
+Planted chains of shared-shingle docs exercise the iteration depth
+of large-star/small-star (the path past the size gate) directly; its
+non-convergence guard (VERDICT.md r1 item 4) and the agreement of
+both paths with the DuckDB oracle are covered here.
 """
 
 import os
+import random
 
 import pytest
 
 from resume_parser_service_spark.operators import cluster as cl
 
 
-def _chain_docs(n: int) -> list[tuple[int, str]]:
-    """Doc i shares exactly one 5-gram with doc i+1 (a chain graph)."""
+def _chain_docs(n: int, ids: list[int] | None = None
+                ) -> list[tuple[int, str]]:
+    """Doc ids[i] shares exactly one 5-gram with doc ids[i+1] (a chain
+    graph); doc ids[n] is isolated. ``ids`` defaults to 0..n."""
+    ids = list(range(n + 1)) if ids is None else ids
     rows = []
     for i in range(n):
         left = f"link{i} alpha beta gamma delta"
         right = f"link{i + 1} alpha beta gamma delta"
-        rows.append((i, left + " " + right))
+        rows.append((ids[i], left + " " + right))
     # one isolated doc
-    rows.append((n, "lonely words that match nothing else at all here"))
+    rows.append((ids[n], "lonely words that match nothing else at all here"))
     return rows
 
 
@@ -45,18 +49,16 @@ def test_chain_converges_to_one_cluster(spark, tmp_path):
     assert labels[8] == 8  # isolated doc keeps its own label
 
 
-def test_unconverged_chain_raises_when_strict(spark, tmp_path, monkeypatch):
-    # pointer jumping covers ~2^rounds chain hops: a 10-link chain
-    # cannot converge in 3 rounds even with the jump (gate forced past
-    # the r6 local union-find path: this test pins LOOP diagnostics)
-    monkeypatch.setattr(cl, "LOCAL_CC_MAX_MEMBERS", -1)
-    monkeypatch.setattr(cl, "MAX_ROUNDS", 3)
-    sf_dir = _write_docs(spark, tmp_path, _chain_docs(10))
-    from resume_parser_service_spark.operators.catalog import _REGISTERED
-    _REGISTERED.pop(id(spark), None)
+def test_lsss_unconverged_chain_raises(spark):
+    """A 300-node path cannot reach its fixpoint (and confirm it) in
+    two rounds: the round cap raises instead of returning partial
+    labels."""
+    n = 300
+    edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
+                                  "src long, dst long")
+    nodes = spark.range(n).withColumnRenamed("id", "doc_id")
     with pytest.raises(RuntimeError, match="did not converge"):
-        cl._q_dedup_clusters(spark, sf_dir, strict=True).collect()
-    _REGISTERED.pop(id(spark), None)
+        cl.connected_components_lsss(spark, edges, nodes, max_rounds=2)
 
 
 def test_hot_shingle_df_cap_bounds_edges(spark, tmp_path):
@@ -76,8 +78,8 @@ def test_hot_shingle_df_cap_bounds_edges(spark, tmp_path):
 
 
 def test_lsss_long_chain_converges_in_log_rounds(spark):
-    """A 300-node path graph: label propagation would need ~300 rounds
-    (over MAX_ROUNDS); large-star/small-star finishes in O(log n)."""
+    """A 300-node path graph: min-label propagation would need ~300
+    rounds; large-star/small-star finishes in O(log n)."""
     from resume_parser_service_spark.operators.cluster import (
         connected_components_lsss)
 
@@ -107,15 +109,16 @@ def test_lsss_multi_component_and_isolated(spark):
 
 
 def test_lsss_agrees_with_label_propagation(spark):
-    """Both CC implementations produce identical labels on the real
-    shared-shingle graph at sf0.001."""
+    """The query's labels equal LSSS run on the SQL reference's pair
+    edges (``_edges_sql``) on the real shared-shingle graph at
+    sf0.001."""
     from resume_parser_service_spark.operators.cluster import (
         _edges_sql, _q_dedup_clusters, connected_components_lsss)
     from resume_parser_service_spark.operators.catalog import register_views
 
     sf = "/root/testdata/sf0.001"
     lp = {r["doc_id"]: r["cluster_id"]
-          for r in _q_dedup_clusters(spark, sf, strict=True).collect()}
+          for r in _q_dedup_clusters(spark, sf).collect()}
     register_views(spark, sf)
     edges = spark.sql(_edges_sql("spark"))
     nodes = spark.table("documents").select("doc_id")
@@ -124,54 +127,49 @@ def test_lsss_agrees_with_label_propagation(spark):
     assert lp == ls
 
 
-def test_label_prop_fallback_to_lsss(spark, monkeypatch):
-    """With the round cap forced below the graph diameter, the query
-    falls back to large-star/small-star instead of returning partial
-    labels — final labels identical to a fully-converged run."""
-    import resume_parser_service_spark.operators.cluster as C
-
-    sf = "/root/testdata/sf0.001"
-    want = {r["doc_id"]: r["cluster_id"]
-            for r in C._q_dedup_clusters(spark, sf, strict=True).collect()}
-    monkeypatch.setattr(C, "LOCAL_CC_MAX_MEMBERS", -1)
-    monkeypatch.setattr(C, "MAX_ROUNDS", 1)
-    got = {r["doc_id"]: r["cluster_id"]
-           for r in C._q_dedup_clusters(spark, sf).collect()}
-    assert got == want
-
-
-def test_pointer_jumping_converges_past_round_count(spark, tmp_path,
-                                                    monkeypatch):
-    """A 20-doc chain (diameter 19) converges within 6 rounds: each
-    round chases a neighbor hop AND a pointer hop, so depth is
-    O(log diameter) — one-hop-per-round propagation would need 19
-    rounds and trip the strict guard."""
+def test_shuffled_chain_converges_past_the_gate(spark, tmp_path,
+                                               monkeypatch):
+    """A 200-doc chain whose ids are shuffled along it, gate forced
+    off: min-label propagation with pointer jumping needs hundreds of
+    rounds on this shape, large-star/small-star a handful."""
     monkeypatch.setattr(cl, "LOCAL_CC_MAX_MEMBERS", -1)
-    monkeypatch.setattr(cl, "MAX_ROUNDS", 6)
-    sf_dir = _write_docs(spark, tmp_path, _chain_docs(20))
+    n = 200
+    ids = list(range(n + 1))
+    random.Random(8).shuffle(ids)
+    sf_dir = _write_docs(spark, tmp_path, _chain_docs(n, ids))
     from resume_parser_service_spark.operators.catalog import _REGISTERED
     _REGISTERED.pop(id(spark), None)
-    labels = {r["doc_id"]: r["cluster_id"]
-              for r in cl._q_dedup_clusters(spark, sf_dir,
-                                            strict=True).collect()}
-    assert all(labels[i] == 0 for i in range(20)), labels
-    assert labels[20] == 20  # isolated doc self-labels outside the loop
-    _REGISTERED.pop(id(spark), None)
+    try:
+        labels = {r["doc_id"]: r["cluster_id"]
+                  for r in cl._q_dedup_clusters(spark, sf_dir).collect()}
+    finally:
+        _REGISTERED.pop(id(spark), None)
+    chain_min = min(ids[:n])
+    assert all(labels[d] == chain_min for d in ids[:n]), labels
+    assert labels[ids[n]] == ids[n]  # isolated doc keeps its own label
+    assert cl.LAST_ROUNDS is not None and cl.LAST_ROUNDS <= 12
 
 
-def test_local_union_find_agrees_with_loop(spark, monkeypatch):
-    """The r6 size-gated single-task union-find must label exactly like
-    the distributed pointer-jump loop (and transitively like the
-    recursive-CTE oracle that checks the loop)."""
+def test_local_union_find_agrees_with_lsss_and_oracle(spark, monkeypatch):
+    """Both paths of the size gate — the single-task union-find and
+    large-star/small-star on the group stars — label exactly like the
+    DuckDB recursive-CTE oracle at sf0.001."""
+    import duckdb
+
     sf = "/root/testdata/sf0.001"
     local = {r["doc_id"]: r["cluster_id"]
              for r in cl._q_dedup_clusters(spark, sf).collect()}
     assert cl.LAST_ROUNDS == 0  # small corpus rides the local path
     monkeypatch.setattr(cl, "LOCAL_CC_MAX_MEMBERS", -1)
-    looped = {r["doc_id"]: r["cluster_id"]
-              for r in cl._q_dedup_clusters(spark, sf, strict=True).collect()}
+    lsss = {r["doc_id"]: r["cluster_id"]
+            for r in cl._q_dedup_clusters(spark, sf).collect()}
     assert cl.LAST_ROUNDS and cl.LAST_ROUNDS > 0
-    assert local == looped
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * "
+                f"FROM '{sf}/documents.parquet'")
+    oracle = dict(con.execute(cl._CLUSTER_ORACLE).fetchall())
+    assert len(set(oracle.values())) < len(oracle)  # some docs cluster
+    assert local == lsss == oracle
 
 
 def test_capped_pairs_base_carries_its_df_cap(spark, tmp_path):
@@ -189,10 +187,9 @@ def test_capped_pairs_base_carries_its_df_cap(spark, tmp_path):
         assert base.max_df == 5
         with pytest.raises(ValueError, match="max_df=5"):
             _capped_pairs(spark, sf_dir, max_df=100, base=base)
-        pairs, _sizes, _seeds = _capped_pairs(spark, sf_dir, max_df=5,
-                                              base=base)
+        pairs, _sizes = _capped_pairs(spark, sf_dir, max_df=5, base=base)
         assert pairs.count() == 0  # the hot shingle is over the cap
-        pairs, _sizes, _seeds = _capped_pairs(spark, sf_dir, max_df=20)
+        pairs, _sizes = _capped_pairs(spark, sf_dir, max_df=20)
         assert pairs.count() == 12 * 11 // 2
     finally:
         _REGISTERED.pop(id(spark), None)
