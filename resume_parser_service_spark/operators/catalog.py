@@ -308,34 +308,23 @@ class ShingleBase(NamedTuple):
     max_df: int
 
 
-def _shingle_base(spark: SparkSession, sf_dir: str, max_df: int = 100,
-                  checkpoint: bool = True) -> ShingleBase:
+def _shingle_base(spark: SparkSession, sf_dir: str,
+                  max_df: int = 100) -> ShingleBase:
     """(sh, grp, max_df): the distinct shingle rows and the df-capped
     multi-doc group lists — the shared substrate of ``_capped_pairs``
-    and ``dedup_clusters`` (whose size gate and connected components
-    both read ``grp``).
-
-    ``checkpoint=True`` (the multi-action consumers: dedup_clusters
-    reads the gate metric, then the group lists) eagerly
-    materializes both frames so the kernel and the corpus-wide
-    aggregation run once. Single-action consumers
-    (``ngram_jaccard_pairs``) pass False: the kernel subtree is then
-    duplicated per consumer (a cheap map) but the whole query
-    pipelines as ONE job with no synchronization barriers — measured
-    ~15% faster at sf1.0."""
+    and ``dedup_clusters``. Both frames are lazy: ``dedup_clusters``
+    checkpoints ``grp``, the one frame it reads twice, while
+    ``ngram_jaccard_pairs`` duplicates the kernel subtree per consumer
+    (a cheap map) so the whole query pipelines as ONE job with no
+    synchronization barriers — measured ~15% faster at sf1.0 than
+    checkpointing the shingle rows."""
     sh = _doc_rows(
         _spread(spark, spark.table("documents")),
         lambda t: ({hash60(s.encode()) for s in shingles(t, 5)},),
         "shingle bigint")
-    if checkpoint:
-        sh = sh.localCheckpoint(eager=True)
-    # filter BEFORE any checkpoint: the frame shrinks to the multi-doc
-    # shingles only
     grp = (sh.groupBy("shingle")
            .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
            .where((F.size("ds") >= 2) & (F.size("ds") <= max_df)))
-    if checkpoint:
-        grp = grp.localCheckpoint(eager=True)
     return ShingleBase(sh, grp, max_df)
 
 
@@ -350,11 +339,10 @@ def _capped_pairs(spark: SparkSession, sf_dir: str, max_df: int = 100,
 
     Shape (guide §2.3/§2.4): the shingle rows come from the pandas
     kernel above (pure map, no DISTINCT exchange, spread over the
-    cluster when the scan is under-split) and are localCheckpoint'd
-    once so the two consumers (sizes, pair generation) don't re-run
-    the kernel. Because the rows are already distinct, a shingle's
-    document frequency IS the size of its doc list, so the df cap and
-    the pair grouping collapse into ONE exchange:
+    cluster when the scan is under-split). Because the rows are
+    already distinct, a shingle's document frequency IS the size of
+    its doc list, so the df cap and the pair grouping collapse into
+    ONE exchange:
     ``groupBy(shingle) -> sorted doc list -> 2 <= size <= max_df``
     (the SQL reference paid three exchanges of the same rows: the
     DISTINCT, the df-count aggregation, and the self-join sides).
@@ -388,9 +376,7 @@ def _q_ngram_jaccard_pandas(spark: SparkSession, sf_dir: str,
     to ``_ngram_jaccard_sql("spark")`` (the in-tree reference; DuckDB
     oracle unchanged)."""
     register_views(spark, sf_dir)
-    pairs, sizes = _capped_pairs(
-        spark, sf_dir, max_df,
-        base=_shingle_base(spark, sf_dir, max_df, checkpoint=False))
+    pairs, sizes = _capped_pairs(spark, sf_dir, max_df)
     sa = sizes.select(F.col("doc_id").alias("doc_a"),
                       F.col("n").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"),

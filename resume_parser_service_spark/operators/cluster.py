@@ -108,9 +108,15 @@ def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     one final left join."""
     global LAST_ROUNDS
     register_views(spark, sf_dir)
-    grp = _shingle_base(spark, sf_dir).grp
+    # both paths read grp: one eager checkpoint runs the kernel and the
+    # grouping once, and the size gate's member count rides its job.
+    # "or 0": SUM of no rows is NULL
+    obs = Observation()
+    grp = (_shingle_base(spark, sf_dir).grp
+           .observe(obs, F.sum(F.size("ds")).alias("n"))
+           .localCheckpoint(eager=True))
+    n_members = int(obs.get["n"] or 0)
     docs = spark.table("documents").select("doc_id")
-    n_members = int(grp.agg(F.sum(F.size("ds"))).collect()[0][0] or 0)
     if n_members > LOCAL_CC_MAX_MEMBERS:
         # ds is sorted, so ds[0] is the group minimum
         stars = grp.select(F.col("ds")[0].alias("src"),
@@ -169,8 +175,7 @@ def connected_components_lsss(spark: SparkSession, edges: DataFrame,
         children = (oriented.join(mins, "a")
                     .select(F.col("b").alias("a"), F.col("m").alias("b")))
         selfs = mins.select(F.col("a"), F.col("m").alias("b"))
-        return (children.unionByName(selfs)
-                .filter("a != b").distinct().repartition("a"))
+        return children.unionByName(selfs).filter("a != b").distinct()
 
     prev = None
     # Each star references the previous round's frame ~4x (symmetrize,

@@ -223,8 +223,8 @@ DUP_MAP_BROADCAST_MAX_ROWS = 1_000_000
 
 
 def enrich_extracted(extracted: DataFrame,
-                     dup_map_broadcast_max: int = DUP_MAP_BROADCAST_MAX_ROWS
-                     ) -> DataFrame:
+                     dup_map_broadcast_max: int = DUP_MAP_BROADCAST_MAX_ROWS,
+                     held: list | None = None) -> DataFrame:
     """Training-data annotations over extracted rows — pure JVM-side
     expressions (one window shuffle for content-dup marking, everything
     else map-side), mirroring the formulas of the catalog queries
@@ -242,6 +242,11 @@ def enrich_extracted(extracted: DataFrame,
     - ``dup_line_fraction`` / ``dup_bigram_fraction``: Gopher-style
       repetition signals as per-row array expressions (same values as
       ``operators.quality.repetition_signals``, zero extra shuffle)
+
+    ``held``: a list that receives the persisted dup map when it fits
+    the broadcast gate, for the caller to unpersist once done with the
+    result (``run_extraction_job`` does, in its ``finally``). Without
+    it the map stays cached until the session ends.
     """
     toks = F.split(F.col("text"), " ")
 
@@ -308,16 +313,16 @@ def enrich_extracted(extracted: DataFrame,
     # The gate's count runs over a PERSISTED dup map so the
     # aggregation (and the input lineage above it) is computed once —
     # the join then reads the cache. Within the gate the cache is
-    # bounded (<= dup_map_broadcast_max key pairs) and lives until the
-    # session ends or the caller unpersists; past the gate it is
-    # dropped immediately and the shuffle join recomputes the pruned
-    # agg inside its own plan (AQE's runtime threshold still gets the
-    # final say).
+    # bounded (<= dup_map_broadcast_max key pairs) and handed to the
+    # caller through ``held``; past the gate it is dropped immediately
+    # and the shuffle join recomputes the pruned agg inside its own
+    # plan (AQE's runtime threshold still gets the final say).
     from pyspark.storagelevel import StorageLevel
     dup_map = dup_map.persist(StorageLevel.MEMORY_AND_DISK)
-    n_dup = dup_map.count()
-    if n_dup <= dup_map_broadcast_max:
+    if dup_map.count() <= dup_map_broadcast_max:
         dup_side = F.broadcast(dup_map)
+        if held is not None:
+            held.append(dup_map)
     else:
         dup_map.unpersist()
         dup_side = dup_map

@@ -103,21 +103,23 @@ def run_extraction_job(spark: SparkSession, pages: DataFrame, out_root: str,
     # One materialization of the kernel output; everything below reuses
     # it. Persist BEFORE enrich: enrich's content-dup map aggregates a
     # second (column-pruned) traversal of the frame, which must read
-    # this cache, never re-run the extraction kernel. Keep the handle —
-    # `extracted` is rebound below (enrich, neardup join), and
-    # unpersisting a rebound plan would leak the cached kernel output
-    # for the session (one leak per batch in an ingest loop).
-    extracted = kernel_out = extracted.persist(StorageLevel.MEMORY_AND_DISK)
-    enriched_out = None
+    # this cache, never re-run the extraction kernel. `held` keeps the
+    # handle of every frame this call persists (enrich's dup map too)
+    # for the finally: `extracted` is rebound below (enrich, neardup
+    # join), and unpersisting a rebound plan would leak the cache for
+    # the session (one leak per batch in an ingest loop).
+    extracted = extracted.persist(StorageLevel.MEMORY_AND_DISK)
+    held = [extracted]
     if enrich:
         # the enriched frame is persisted TOO: several downstream
         # actions (count, table commit, audit commit, neardup join)
         # would otherwise each re-run the dup-map aggregation + join
         # over the kernel cache (r3 review finding)
-        extracted = enriched_out = enrich_extracted(extracted) \
+        extracted = enrich_extracted(extracted, held=held) \
             .persist(StorageLevel.MEMORY_AND_DISK)
+        held.append(extracted)
     rejected = rejected.persist(StorageLevel.MEMORY_AND_DISK)
-    new_bands = None
+    held.append(rejected)
     try:
         n_extracted = extracted.count()
         n_rejected = rejected.count()
@@ -139,6 +141,7 @@ def run_extraction_job(spark: SparkSession, pages: DataFrame, out_root: str,
             # kernel does not run a second time for the index
             new_bands = band_signatures(spark, ok_docs) \
                 .persist(StorageLevel.MEMORY_AND_DISK)
+            held.append(new_bands)
             idx = bands_tbl.read(spark)
             if idx is not None:
                 # seen = replayed urls (crash between the bands commit
@@ -216,9 +219,5 @@ def run_extraction_job(spark: SparkSession, pages: DataFrame, out_root: str,
                 "rejected": n_rejected, "snapshot_id": snapshot_id,
                 "compacted": compacted, "resumed_noop": False}
     finally:
-        kernel_out.unpersist()
-        rejected.unpersist()
-        if enriched_out is not None:
-            enriched_out.unpersist()
-        if new_bands is not None:
-            new_bands.unpersist()
+        for df in held:
+            df.unpersist()

@@ -183,7 +183,7 @@ def test_capped_pairs_base_carries_its_df_cap(spark, tmp_path):
     _REGISTERED.pop(id(spark), None)
     register_views(spark, sf_dir)
     try:
-        base = _shingle_base(spark, sf_dir, max_df=5, checkpoint=False)
+        base = _shingle_base(spark, sf_dir, max_df=5)
         assert base.max_df == 5
         with pytest.raises(ValueError, match="max_df=5"):
             _capped_pairs(spark, sf_dir, max_df=100, base=base)
@@ -193,3 +193,25 @@ def test_capped_pairs_base_carries_its_df_cap(spark, tmp_path):
         assert pairs.count() == 12 * 11 // 2
     finally:
         _REGISTERED.pop(id(spark), None)
+
+
+def test_dedup_clusters_job_count(spark, tmp_path):
+    """One union-find dedup_clusters call runs at most 9 Spark jobs:
+    the shingle kernel, the grouping and the size gate's member count
+    share the group lists' one eager checkpoint job."""
+    from resume_parser_service_spark.operators.catalog import _REGISTERED
+    sf_dir = _write_docs(spark, tmp_path, _chain_docs(8))
+    sc = spark.sparkContext
+    group = "test_dedup_clusters_job_count"
+    _REGISTERED.pop(id(spark), None)
+    try:
+        cl._q_dedup_clusters(spark, sf_dir).collect()  # views registered
+        sc.setJobGroup(group, "one dedup_clusters call")
+        try:
+            cl._q_dedup_clusters(spark, sf_dir).collect()
+        finally:
+            sc._jsc.clearJobGroup()
+    finally:
+        _REGISTERED.pop(id(spark), None)
+    assert cl.LAST_ROUNDS == 0  # the union-find path
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 9

@@ -271,6 +271,21 @@ def test_run_extraction_job_enrich(spark, tmp_path):
     assert row["fingerprint"] is not None and row["ws_tokens"] > 0
 
 
+def test_run_extraction_job_releases_its_caches(spark, tmp_path):
+    """Every frame a job persists, the enrich dup map included, is
+    released when it returns: batch after batch, no persisted RDD the
+    call made is left. (Ids, not a count: the context cleaner may drop
+    other tests' checkpoints in the meantime.)"""
+    out = str(tmp_path / "out")
+    jsc = spark.sparkContext._jsc
+    for n_docs in (20, 40, 60):  # each batch adds 20 new docs
+        before = set(jsc.getPersistentRDDs().keys())
+        stats = run_extraction_job(spark, build_pages_df(spark, n_docs),
+                                   out, enrich=True, neardup_index=True)
+        assert stats["extracted"] > 0
+        assert set(jsc.getPersistentRDDs().keys()) <= before
+
+
 def test_canonicalize_urls_collapses_variants(spark, tmp_path):
     """canonicalize_urls=True: tracking-param/case variants of one page
     collapse to a single committed row under the canonical key, and a

@@ -67,3 +67,29 @@ def test_entry_smoke(spark):
     edf = entrymod.entry(spark).toPandas()
     assert len(edf) > 0
     assert int(edf["n_byte_identical"].sum()) == int(edf["n_docs"].sum())
+
+
+def test_repeated_query_reuses_generated_classes(spark):
+    """The session's codegen class cache holds the engine's working set:
+    between two runs of the first dedup-suite query the other five
+    touch more classes than Spark's default cache of 100 holds (one
+    pass generates ~120), yet the repeat compiles nothing."""
+    from resume_parser_service_spark.operators.catalog import register_views
+    from resume_parser_service_spark.operators.decontaminate import \
+        contaminated_docs
+
+    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    queries = entrymod.queries()
+    first, *rest = [queries[q] for q in (
+        "ngram_jaccard_pairs", "dedup_clusters", "band_signatures",
+        "repeated_spans", "embedding_neardup_pairs")]
+    register_views(spark, SF_DIR)
+    docs = spark.table("documents")
+    first(spark, SF_DIR).collect()
+    for q in rest:
+        q(spark, SF_DIR).collect()
+    contaminated_docs(spark, docs, docs.where("doc_id % 50 = 0"),
+                      n=8).collect()
+    compiled = cm.METRIC_COMPILATION_TIME().getCount()
+    first(spark, SF_DIR).collect()
+    assert cm.METRIC_COMPILATION_TIME().getCount() - compiled == 0
