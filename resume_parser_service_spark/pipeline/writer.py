@@ -23,7 +23,6 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..kernels.shingle import hash60
 from . import manifests as _manifests
 
 __all__ = ["SnapshotTable", "SnapshotConflictError"]
@@ -36,12 +35,11 @@ class SnapshotConflictError(RuntimeError):
 
 class SnapshotTable:
     def __init__(self, root: str, key_col: str = "url",
-                 buckets: int | None = None,
                  bloom_ndv: int | None = None):
-        """``buckets``: hash-bucket the data files by key (B11 index
-        layout) — point lookups then read 1/buckets of the files.
-        ``bloom_ndv``: write a parquet bloom filter on the key column
-        sized for this many distinct keys per file (None = off, the
+        """Key-scoped reads (the B11 index) are served by manifest
+        min/max stats, sorted compaction and, optionally, a key bloom
+        filter. ``bloom_ndv``: write a parquet bloom filter on the key
+        column sized for this many distinct keys per file (None = off, the
         default — the bloom is NDV-sized, ~1.2 bytes/key, REGARDLESS of
         the file's row count, so it only pays on the primary keyed
         table with realistically-sized files; audit/index side tables
@@ -49,7 +47,6 @@ class SnapshotTable:
         skips blooms on fully dictionary-encoded chunks anyway)."""
         self.root = root
         self.key_col = key_col
-        self.buckets = buckets
         self.bloom_ndv = bloom_ndv
         self.snap_dir = os.path.join(root, "_snapshots")
         os.makedirs(self.snap_dir, exist_ok=True)
@@ -110,32 +107,21 @@ class SnapshotTable:
         os.replace(tmp, self._evolution_path)
         return op["version"]
 
-    _INTERNAL_COLS = ("_snapshot_id", "_deleted", "_bucket")
+    _INTERNAL_COLS = ("_snapshot_id", "_deleted")
 
     def _current_columns(self) -> dict[str, str] | None:
         """Current logical schema {column: spark_dtype}: one parquet
         footer of the last live snapshot (driver-side pyarrow, no Spark
         job) transformed through the ops recorded after it. None when
         no data or footer exists yet (validation is then skipped)."""
-        snaps = [s for s in self.snapshots() if not s.get("expired")]
-        live = self.live_snapshots() if snaps else []
-        if not live:
-            return None
-        last = live[-1]
-        fp = None
-        for dirpath, _dirs, files in os.walk(
-                os.path.join(self.root, last["path"])):
-            for f in sorted(files):
-                if f.endswith(".parquet"):
-                    fp = os.path.join(dirpath, f)
-                    break
-            if fp:
-                break
-        if fp is None:
+        import pyarrow.parquet as pq
+        live = self.live_snapshots()
+        last = live[-1] if live else {}
+        if not last.get("files"):
             return None
         try:
-            import pyarrow.parquet as pq
-            schema = pq.ParquetFile(fp).schema_arrow
+            schema = pq.ParquetFile(os.path.join(
+                self.root, last["files"][0]["path"])).schema_arrow
         except Exception:
             return None
         _ARROW2SPARK = {"int8": "tinyint", "int16": "smallint",
@@ -279,12 +265,6 @@ class SnapshotTable:
                                  F.lit(snap_id).cast("long"))
         if "_deleted" not in out.columns:
             out = out.withColumn("_deleted", F.lit(False))
-        if self.buckets:
-            bucket = F.pmod(
-                F.conv(F.substring(F.md5(F.col(self.key_col)), 1, 15),
-                       16, 10).cast("bigint"),
-                F.lit(self.buckets))
-            out = out.withColumn("_bucket", bucket)
         writer = out.write.mode("overwrite")
         if self.bloom_ndv:
             # parquet bloom filter on the key column: point lookups
@@ -301,8 +281,6 @@ class SnapshotTable:
                               f"{self.key_col}", "true")
                       .option(f"parquet.bloom.filter.expected.ndv#"
                               f"{self.key_col}", str(self.bloom_ndv)))
-        if self.buckets:
-            writer = writer.partitionBy("_bucket")
         writer.parquet(path)
         manifest = {"id": snap_id, "parent": last["id"] if last else None,
                     "path": rel, "committed_at": time.time(),
@@ -342,11 +320,9 @@ class SnapshotTable:
         equivalent): rows, bytes, and min/max of the key column read
         from the parquet footers (pyarrow, driver-side, no Spark job) —
         lets point lookups and key-range scans prune files without
-        opening them."""
-        try:
-            import pyarrow.parquet as pq
-        except ImportError:  # stats are an optimization, never required
-            return []
+        opening them. This is the only directory walk of a snapshot:
+        every reader takes the snapshot's file list from these entries."""
+        import pyarrow.parquet as pq
         out: list[dict] = []
         for dirpath, _dirs, files in os.walk(path):
             for f in sorted(files):
@@ -394,32 +370,30 @@ class SnapshotTable:
         target = None
         if version is not None and snaps:
             target = max(s.get("schema_version", 0) for s in snaps)
-        return self._read_snaps(spark, snaps, to_version=target)
+        return self._scan(
+            spark, [(s, [os.path.join(self.root, s["path"])]) for s in snaps],
+            to_version=target)
 
-    def _read_snaps(self, spark: SparkSession, snaps: list[dict],
-                    to_version: int | None = None) -> DataFrame | None:
-        """Union an explicit snapshot list (each frame transformed from
-        ITS schema version to ``to_version``; None = current) — the
-        scan body of ``read``, also used by ``read_changes`` to touch
-        only the in-range snapshots."""
-        if not snaps:
+    def _scan(self, spark: SparkSession,
+              groups: list[tuple[dict, list[str]]],
+              to_version: int | None = None) -> DataFrame | None:
+        """The one parquet scan of the table, over ``[(snapshot,
+        paths)]`` — whole snapshot directories or manifest-pruned data
+        files. Without declared evolution ops it is one multi-path scan
+        (mergeSchema covers the implicit additive case: columns missing
+        from older snapshots read as NULL, Iceberg semantics); with
+        them each group is read on its own and transformed from ITS
+        schema version to ``to_version`` (None = current) before the
+        union. None for no groups."""
+        if not groups:
             return None
         ops = self._evolution()  # loaded ONCE per read
-        if not self.buckets and not ops:
-            # fast path: one multi-path scan. mergeSchema covers the
-            # implicit (pre-declared) additive case — columns missing
-            # from older snapshots read as NULL, Iceberg semantics
-            paths = [os.path.join(self.root, s["path"]) for s in snaps]
-            return spark.read.option("mergeSchema", "true").parquet(*paths)
-        # bucketed layout and/or declared evolution ops: per-snapshot
-        # read so each frame is transformed from ITS schema version
+        reader = spark.read.option("mergeSchema", "true")
+        if not ops:
+            return reader.parquet(*[p for _s, ps in groups for p in ps])
         df = None
-        for s in snaps:
-            p = os.path.join(self.root, s["path"])
-            reader = spark.read.option("mergeSchema", "true")
-            if self.buckets:
-                reader = reader.option("basePath", p)
-            part = self._apply_evolution(reader.parquet(p),
+        for s, paths in groups:
+            part = self._apply_evolution(reader.parquet(*paths),
                                          s.get("schema_version", 0), ops,
                                          to_version)
             df = part if df is None else df.unionByName(
@@ -428,70 +402,34 @@ class SnapshotTable:
 
     def _key_scoped_read(self, spark: SparkSession, key: str
                          ) -> DataFrame | None:
-        """Minimal-scan frame for one key: bucket-dir pruning with a
-        bucketed layout, manifest-stats file pruning otherwise, full
-        read as the last resort. Returns None for an empty prune."""
-        ops = self._evolution()  # loaded ONCE per lookup
-        if self.buckets:
-            # functions.hash60 in Python: the bucket without a Spark job
-            b = hash60(key.encode("utf-8")) % self.buckets
-            found = [(s, os.path.join(self.root, s["path"], f"_bucket={b}"))
-                     for s in self.live_snapshots()]
-            found = [(s, p) for s, p in found if os.path.exists(p)]
-            if not found:
-                return None
-            if not ops:
-                # no declared evolution: keep the single multi-path
-                # scan on the B1 hot path (mergeSchema covers the
-                # implicit additive case)
-                return spark.read.option("mergeSchema", "true") \
-                    .parquet(*[p for _s, p in found])
-            df = None
-            for s, p in found:
-                part = self._apply_evolution(
-                    spark.read.option("mergeSchema", "true").parquet(p),
-                    s.get("schema_version", 0), ops)
-                df = part if df is None else df.unionByName(
-                    part, allowMissingColumns=True)
-            return df
+        """Minimal-scan frame for one key: the data files whose manifest
+        stats can hold it, or a full read when a live file lacks stats.
+        Returns None for an empty prune."""
         groups = self._prune_by_snapshot(key_eq=key)
-        if groups is not None:
-            if not groups:
-                return None
-            if not ops:
-                files = [f for _s, fs in groups for f in fs]
-                return spark.read.option("mergeSchema", "true") \
-                    .parquet(*files)
-            # declared evolution: per-snapshot pruned reads so each
-            # group transforms from ITS schema version — manifest-stats
-            # pruning (B11) is retained under evolution
-            df = None
-            for snap, files in groups:
-                part = self._apply_evolution(
-                    spark.read.option("mergeSchema", "true")
-                    .parquet(*files),
-                    snap.get("schema_version", 0), ops)
-                df = part if df is None else df.unionByName(
-                    part, allowMissingColumns=True)
-            return df
-        return self.read(spark)
+        if groups is None:
+            return self.read(spark)
+        return self._scan(spark, groups)
 
-    def point_lookup(self, spark: SparkSession, key: str) -> DataFrame:
-        """B1 point lookup. With a bucketed layout only the key's bucket
-        directory of each snapshot is scanned (1/buckets of the files);
-        unbucketed tables fall back to manifest-stats file pruning or a
-        filtered full read."""
+    def _latest_per_key(self, df: DataFrame) -> DataFrame:
+        """One row per key — the highest ``_snapshot_id`` wins — with
+        delete tombstones filtered out."""
         from pyspark.sql import functions as F
-        df = self._key_scoped_read(spark, key)
-        if df is None:
-            return spark.createDataFrame([], f"{self.key_col} string")
         rest = [c for c in df.columns if c != self.key_col]
-        cur = (df.filter(F.col(self.key_col) == key)
-               .groupBy(self.key_col)
+        cur = (df.groupBy(self.key_col)
                .agg(F.max_by(F.struct(*rest), F.col("_snapshot_id"))
                     .alias("_row"))
                .select(self.key_col, "_row.*"))
         return cur.filter(~F.col("_deleted")).drop("_deleted")
+
+    def point_lookup(self, spark: SparkSession, key: str) -> DataFrame:
+        """B1 point lookup: manifest-stats file pruning (tight after a
+        sorted compaction, refined by the key bloom filter at the scan)
+        or a filtered full read."""
+        from pyspark.sql import functions as F
+        df = self._key_scoped_read(spark, key)
+        if df is None:
+            return spark.createDataFrame([], f"{self.key_col} string")
+        return self._latest_per_key(df.filter(F.col(self.key_col) == key))
 
     def read_current(self, spark: SparkSession,
                      version: int | None = None) -> DataFrame | None:
@@ -499,16 +437,8 @@ class SnapshotTable:
         — replace-on-key semantics of
         /root/reference/app/services/resume_service.py:106-182), delete
         tombstones filtered out."""
-        from pyspark.sql import functions as F
         df = self.read(spark, version)
-        if df is None:
-            return None
-        rest = [c for c in df.columns if c != self.key_col]
-        cur = (df.groupBy(self.key_col)
-               .agg(F.max_by(F.struct(*rest), F.col("_snapshot_id"))
-                    .alias("_row"))
-               .select(self.key_col, "_row.*"))
-        return cur.filter(~F.col("_deleted")).drop("_deleted")
+        return None if df is None else self._latest_per_key(df)
 
     def _with_tombstones(self, live: DataFrame, full: DataFrame
                          ) -> DataFrame:
@@ -623,7 +553,8 @@ class SnapshotTable:
         snaps = [s for s in self.live_snapshots(to_version)
                  if s["id"] > from_version]
         _manifests.check_delta_range(snaps, from_version)
-        df = self._read_snaps(spark, snaps)
+        df = self._scan(
+            spark, [(s, [os.path.join(self.root, s["path"])]) for s in snaps])
         if df is None:
             return None
         changes = (df.filter(F.col("_snapshot_id") > F.lit(from_version))
@@ -631,7 +562,7 @@ class SnapshotTable:
                                F.when(F.col("_deleted"), F.lit("delete"))
                                .otherwise(F.lit("insert")))
                    .withColumnRenamed("_snapshot_id", "_commit_version")
-                   .drop("_deleted", "_bucket"))
+                   .drop("_deleted"))
         if classify_updates:
             base = self.read(spark)  # live chain: never needs expired data
             changed_keys = changes.select(self.key_col).distinct()
@@ -670,8 +601,9 @@ class SnapshotTable:
         from pyspark.sql import functions as F
         cur = self.read_current(spark)
         if cur is None:
-            snap = self.commit(new_df)
+            # an empty merge commits nothing, as on a non-empty table
             n = new_df.count()
+            snap = self.commit(new_df) if n else None
             return {"inserted": n, "updated": 0, "unchanged": 0,
                     "snapshot_id": snap}
         cmp_cols = [c for c in new_df.columns
@@ -805,7 +737,7 @@ class SnapshotTable:
         unsorted compaction hash-mixes keys, leaving every file's
         [min,max] spanning the whole key space and the stats useless —
         at 100 TB the sorted rewrite is what keeps key-scoped reads
-        from becoming full scans on unbucketed tables."""
+        from becoming full scans."""
         from pyspark.sql import functions as F
         snaps = self.live_snapshots()
         if not snaps:

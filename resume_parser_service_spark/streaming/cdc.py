@@ -15,10 +15,11 @@ refresh, incremental near-dup banding — tail the table's delta
 continuously). Implemented with the PySpark 4 Python DataSource API:
 the per-batch planning (manifest listing, compaction guard) runs on the
 driver in ``partitions()``; the data files themselves are read on
-EXECUTORS, one ``InputPartition`` per parquet file, via Arrow record
-batches — the scan parallelism is the file count, never a driver-side
-bottleneck. The table root must be on storage every executor can reach
-(same shared-filesystem assumption as ``SnapshotTable`` itself).
+EXECUTORS, one ``InputPartition`` per data file the snapshot manifest
+lists, via Arrow record batches — the scan parallelism is the file
+count, never a driver-side bottleneck. The table root must be on
+storage every executor can reach (same shared-filesystem assumption as
+``SnapshotTable`` itself).
 
 Scope guards (documented, fail-loud): ranges that cross a re-stamping
 compaction raise (history collapsed — same rule as ``read_changes``);
@@ -45,7 +46,7 @@ from ..pipeline.manifests import check_delta_range, live_snapshots
 __all__ = ["SnapshotCDCDataSource", "stream_changes",
            "stream_neardup_index", "maintain_index_until_current"]
 
-_INTERNAL = ("_deleted", "_bucket")
+_INTERNAL = ("_deleted", "_snapshot_id")
 
 
 def _arrow_to_ddl(t) -> str:
@@ -123,16 +124,9 @@ class _CDCStreamReader(DataSourceStreamReader):
         snaps = [s for s in live_snapshots(self.root, to_v)
                  if s["id"] > from_v]
         check_delta_range(snaps, from_v, label="stream changes")
-        parts: list[InputPartition] = []
-        for s in snaps:
-            base = os.path.join(self.root, s["path"])
-            for dirpath, _dirs, files in os.walk(base):
-                for f in sorted(files):
-                    if f.endswith(".parquet"):
-                        parts.append(_CDCPartition(
-                            os.path.join(dirpath, f), from_v,
-                            self.columns))
-        return parts
+        return [_CDCPartition(os.path.join(self.root, e["path"]), from_v,
+                              self.columns)
+                for s in snaps for e in s["files"]]
 
     # ------------------------------------------------------- reading --
     def read(self, partition: _CDCPartition) -> Iterator:
@@ -201,21 +195,13 @@ def _schema_columns(root: str) -> list[tuple[str, str]]:
     live = live_snapshots(root)
     if not live:
         raise ValueError(f"snapshot_cdc: no snapshots under {root}")
-    fp = None
-    for dirpath, _dirs, files in os.walk(
-            os.path.join(root, live[-1]["path"])):
-        for f in sorted(files):
-            if f.endswith(".parquet"):
-                fp = os.path.join(dirpath, f)
-                break
-        if fp:
-            break
-    if fp is None:
+    if not live[-1].get("files"):
         raise ValueError(f"snapshot_cdc: snapshot {live[-1]['id']} has "
                          f"no data files")
-    schema = pq.ParquetFile(fp).schema_arrow
+    schema = pq.ParquetFile(
+        os.path.join(root, live[-1]["files"][0]["path"])).schema_arrow
     cols = [(f.name, _arrow_to_ddl(f.type)) for f in schema
-            if f.name not in _INTERNAL and f.name != "_snapshot_id"]
+            if f.name not in _INTERNAL]
     cols.append(("_commit_version", "long"))
     cols.append(("_change_type", "string"))
     return cols

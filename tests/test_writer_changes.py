@@ -141,16 +141,6 @@ def test_changes_under_schema_evolution(spark, tmp_path):
     assert rows[0]["body"] == "b"
 
 
-def test_changes_bucketed_layout(spark, tmp_path):
-    tbl = SnapshotTable(str(tmp_path / "t"), buckets=4)
-    tbl.commit(_df(spark, [("u1", "a", [1.0]), ("u2", "b", [2.0])]))
-    tbl.commit(_df(spark, [("u3", "c", [3.0])]))
-    delta = tbl.read_changes(spark, 1)
-    assert "_bucket" not in delta.columns  # internal layout col stripped
-    assert {(r["url"], r["_commit_version"]): r["_change_type"]
-            for r in delta.collect()} == {("u3", 2): "insert"}
-
-
 def test_delete_event_survives_preserving_compaction(spark, tmp_path):
     """Stamp-preserving compactions must carry tombstones forward: a
     CDC consumer checkpointed before the rewrite still sees the delete

@@ -77,16 +77,6 @@ def test_chained_ops_apply_in_order(spark, tmp_path):
         {"a": (1, False), "b": (2, False), "c": (3, True)}
 
 
-def test_evolution_with_bucketed_layout_and_point_lookup(spark, tmp_path):
-    t = SnapshotTable(str(tmp_path / "t"), buckets=4)
-    t.commit(_mkdf(spark, [{"url": f"u{i}", "score": i}
-                           for i in range(8)]))
-    t.rename_column("score", "quality")
-    t.commit(_mkdf(spark, [{"url": "u1", "quality": 99}]))
-    assert t.point_lookup(spark, "u1").first()["quality"] == 99
-    assert t.point_lookup(spark, "u3").first()["quality"] == 3
-
-
 def test_compaction_rewrites_under_current_schema(spark, tmp_path):
     t = SnapshotTable(str(tmp_path / "t"))
     t.commit(_mkdf(spark, [{"url": "a", "s": 1}]))
@@ -171,7 +161,7 @@ def test_reserved_columns_are_protected(spark, tmp_path):
                  lambda: t.drop_column("url"),
                  lambda: t.drop_column("_deleted"),
                  lambda: t.widen_column("url", "binary"),
-                 lambda: t.add_column("_bucket", "long")):
+                 lambda: t.add_column("_deleted", "boolean")):
         with pytest.raises(ValueError):
             call()
 

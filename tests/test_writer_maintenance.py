@@ -138,24 +138,6 @@ def test_crashed_commit_leaves_no_visible_snapshot(spark, tmp_path):
     assert tbl.read_current(spark).count() == 2
 
 
-def test_compact_preserves_bucketed_layout(spark, tmp_path):
-    """Compaction of a hash-bucketed table rewrites INTO the bucketed
-    layout, so point lookups keep their 1/buckets pruning."""
-    import os as _os
-
-    tbl = SnapshotTable(str(tmp_path / "t"), buckets=4)
-    tbl.commit(_df(spark, [(f"u{i}", "a", [1.0]) for i in range(20)]))
-    tbl.commit(_df(spark, [(f"u{i}", "b", [1.0]) for i in range(10)]))
-    res = tbl.compact(spark)
-    assert res["compacted"] == 2
-    snap = tbl.live_snapshots()[0]
-    snap_dir = _os.path.join(tbl.root, snap["path"])
-    assert any(d.startswith("_bucket=") for d in _os.listdir(snap_dir))
-    row = tbl.point_lookup(spark, "u3").collect()
-    assert len(row) == 1 and row[0]["text"] == "b"
-    assert tbl.read_current(spark).count() == 20
-
-
 def test_compact_binpacks_file_count(spark, tmp_path):
     """Many tiny delta snapshots collapse to a handful of files."""
     tbl = SnapshotTable(str(tmp_path / "t"))
@@ -350,3 +332,44 @@ def test_sorted_compaction_prunes_point_lookup_to_one_file(spark, tmp_path):
     assert len(files_u) >= 3
     # hash-mixed files: the same lookup cannot prune below all files
     assert len(tbl_u.prune_files(key_eq="u101")) == len(files_u)
+
+
+def _warm_jobs(spark, group, fn):
+    """Spark jobs of one warm ``fn()`` call (a first call runs first)."""
+    sc = spark.sparkContext
+    fn()
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("rename", [False, True])
+def test_table_read_job_count(spark, tmp_path, rename):
+    """Ratchet on the Spark jobs of key-scoped and changelog reads of 4
+    snapshots of 3 data files each: a point lookup runs at most 3 jobs
+    and a read_changes 2 — 5 and 3 once a declared rename makes every
+    snapshot its own scan."""
+    tbl = SnapshotTable(str(tmp_path / "t"))
+    col = "text"
+    for i in range(4):
+        if rename and i == 2:
+            tbl.rename_column("text", "body")
+            col = "body"
+        tbl.commit(_df(spark, [(f"u{k:02d}", f"v{i}", [1.0])
+                               for k in range(i * 5, i * 5 + 12)])
+                   .withColumnRenamed("text", col)
+                   .repartitionByRange(3, "url"))
+    assert [len(s["files"]) for s in tbl.live_snapshots()] == [3] * 4
+    group = f"test_table_read_job_count_{rename}"
+    lookup = _warm_jobs(spark, f"{group}_lookup",
+                        lambda: tbl.point_lookup(spark, "u11").collect())
+    changes = _warm_jobs(spark, f"{group}_changes",
+                         lambda: tbl.read_changes(spark, 2).collect())
+    assert [tuple(r) for r in tbl.point_lookup(spark, "u11").collect()] \
+        == [("u11", "v2", [1.0], 3)]
+    assert tbl.read_changes(spark, 2).count() == 24
+    assert lookup <= (5 if rename else 3)
+    assert changes <= (3 if rename else 2)

@@ -89,29 +89,6 @@ def test_null_fields_compare_null_safe(spark, tmp_path):
     assert r2["updated"] == 1
 
 
-def test_bucketed_point_lookup(spark, tmp_path):
-    """B11 layout: point lookup scans only the key's bucket dir."""
-    import os
-    tbl = SnapshotTable(str(tmp_path / "b"), buckets=8)
-    rows = [(f"u{i}", f"text{i}", [float(i)]) for i in range(50)]
-    tbl.merge_upsert(spark, _df(spark, rows))
-    tbl.merge_upsert(spark, _df(spark, [("u7", "text7-v2", [7.0])]))
-
-    hit = tbl.point_lookup(spark, "u7").collect()
-    assert len(hit) == 1
-    assert hit[0]["text"] == "text7-v2"
-    assert tbl.point_lookup(spark, "nope").count() == 0
-
-    # the bucket layout exists on disk
-    snap = tbl.snapshots()[0]
-    snap_dir = os.path.join(tbl.root, snap["path"])
-    assert any(d.startswith("_bucket=") for d in os.listdir(snap_dir))
-
-    # read_current still resolves replace-on-key across snapshots
-    cur = {r["url"]: r["text"] for r in tbl.read_current(spark).collect()}
-    assert cur["u7"] == "text7-v2" and len(cur) == 50
-
-
 def test_schema_evolution_across_snapshots(spark, tmp_path):
     """A column added in a later snapshot reads back across the union
     (older rows NULL) — Iceberg-style schema evolution semantics."""
@@ -223,3 +200,15 @@ def test_commit_writes_key_bloom_filter(spark, tmp_path):
     assert _bytes(on) > _bytes(off) + 50_000
     assert sorted(r["url"] for r in on.read_current(spark).collect()) \
         == sorted(r["url"] for r in off.read_current(spark).collect())
+
+
+def test_empty_merge_into_empty_table_commits_nothing(spark, tmp_path):
+    """An empty merge commits no snapshot, on an empty table as on a
+    non-empty one."""
+    tbl = SnapshotTable(str(tmp_path / "t"))
+    assert tbl.merge_upsert(spark, _df(spark, [])) == {
+        "inserted": 0, "updated": 0, "unchanged": 0, "snapshot_id": None}
+    assert tbl.snapshots() == []
+    tbl.merge_upsert(spark, _df(spark, [("u1", "a", [1.0])]))
+    assert tbl.merge_upsert(spark, _df(spark, []))["snapshot_id"] is None
+    assert [s["id"] for s in tbl.snapshots()] == [1]
