@@ -14,8 +14,9 @@ or locally: ``python -m resume_parser_service_spark --input ... --output ...``
 Subcommands via flags:
   --input DIR      parquet pages table (url, warc_ts, html, text, lang)
   --output DIR     output root (resumes_extracted + extraction_audit)
-  --salt-input     repartition input by xxhash64(url) before the kernel
-  --partitions N   salt/shuffle partition count (default: 2x cores)
+  --salt-input     repartition input by xxhash64(url) before the kernel,
+                   into spark.sql.shuffle.partitions parts (2x cores,
+                   at least 8)
   --synthesize N   instead of --input, generate an N-doc synthetic corpus
   --stream         treat --input as a streaming file source (availableNow)
   --compact-after N  bin-pack-compact + expire the extracted table when
@@ -39,8 +40,7 @@ def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="resume_parser_service_spark")
     p.add_argument("--input")
     p.add_argument("--output", required=True)
-    p.add_argument("--salt-input", action="store_true")
-    p.add_argument("--partitions", type=int, default=None)
+    p.add_argument("--salt-input", action="store_true", dest="salt")
     p.add_argument("--synthesize", type=int, default=None)
     p.add_argument("--stream", action="store_true")
     p.add_argument("--compact-after", type=int, default=None)
@@ -68,6 +68,8 @@ def main(argv: list[str] | None = None) -> int:
     from .session import get_spark
     spark = get_spark(app_name="resume-parser-service-spark",
                       cores=args.cores)
+    salt = (int(spark.conf.get("spark.sql.shuffle.partitions"))
+            if args.salt else None)
 
     if args.maintain_index:
         if args.changes_since is not None:
@@ -130,9 +132,8 @@ def main(argv: list[str] | None = None) -> int:
     elif args.input and args.stream:
         from .streaming import stream_extraction
         q = stream_extraction(spark, args.input, args.output,
-                              salt_partitions=args.partitions,
+                              salt_partitions=salt,
                               available_now=True,
-                              salt_input=args.salt_input,
                               compact_after=args.compact_after,
                               enrich=args.enrich,
                               neardup_index=args.neardup_index,
@@ -146,8 +147,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from .pipeline.run import run_extraction_job
     stats = run_extraction_job(spark, pages, args.output,
-                               salt_partitions=args.partitions,
-                               salt_input=args.salt_input,
+                               salt_partitions=salt,
                                compact_after=args.compact_after,
                                enrich=args.enrich,
                                neardup_index=args.neardup_index,

@@ -187,16 +187,6 @@ shf AS (
 )"""
 
 
-def _shingle_sql(dialect: str) -> str:
-    """5-word shingle fingerprints per doc (n-gram dedup primitive)."""
-    return f"""
-WITH sh AS ({_shingle_rel(dialect)})
-SELECT doc_id, count(DISTINCT shingle) AS n_shingles,
-       min({_hash60('shingle', dialect)}) AS min_shingle_hash
-FROM sh GROUP BY doc_id ORDER BY doc_id
-"""
-
-
 def _ngram_jaccard_sql(dialect: str, max_df: int = 100) -> str:
     """Candidate near-dup pairs: docs sharing >=1 identical 5-word
     shingle, with shared-shingle counts + Jaccard over shingle sets
@@ -238,9 +228,9 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     scan has thousands of natural splits that already cover every core
     — there the exchange of (doc_id, text) rows is pure cost, so it is
     only paid when the planned scan yields fewer partitions than the
-    cluster has slots (same pattern as the product pipeline's gated
-    ``salt_input=``). ``df.rdd.getNumPartitions()`` is plan-time only —
-    no job runs.
+    cluster has slots (the product pipeline's opt-in counterpart is
+    ``salt_partitions=``). ``df.rdd.getNumPartitions()`` is plan-time
+    only — no job runs.
 
     Residual (accepted): the gate counts splits, not balance. A scan
     with >= slots partitions where one holds most ROWS skips the
@@ -250,7 +240,7 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     tiny files plus one mid-size (sub-``maxPartitionBytes``) file,
     whose serial tail is itself bounded by that byte cap. Skewed
     per-row COST (not size) is what the product pipeline's
-    ``salt_input=`` exists for."""
+    ``salt_partitions=`` exists for."""
     slots = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= slots:
         return df
@@ -1129,8 +1119,8 @@ ORDER BY keeper_doc_id""")
     # incremental-dedup band index (operators/incremental.py): per-doc
     # MinHash band signatures, the append-only index row format of the
     # batch-vs-corpus near-dup workflow. (Replaced shingle_stats, which
-    # ngram_jaccard_pairs subsumes; its zero-join plan shape is still
-    # asserted in tests/test_functions_plans.py from _shingle_sql.)
+    # ngram_jaccard_pairs subsumes; the zero-join, zero-exchange shape of
+    # _shingle_rel is asserted in tests/test_functions_plans.py.)
     def _run_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         from .incremental import band_signatures
         register_views(spark, sf_dir)

@@ -12,8 +12,7 @@ persisting each document's band signatures as an append-only index:
 2. ``match_against_index`` — candidate pairs (new doc, indexed doc)
    that collide in >= 1 band. The new batch is tiny next to the index,
    so the BATCH side is broadcast and the index only streams through a
-   map-side hash join: zero shuffle of the index, ever. (With the index
-   table bucketed by ``band_hash`` the scan also prunes buckets.)
+   map-side hash join: zero shuffle of the index, ever.
 3. Novel docs = batch anti-join candidates; their bands are appended to
    the index for the next batch. The index never rewrites.
 

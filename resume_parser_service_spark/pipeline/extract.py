@@ -6,8 +6,9 @@ Plan shape (SURVEY.md §3.1 rebuild):
       -> cheap validation predicates         (BEFORE the opaque Python stage —
                                               Catalyst cannot push filters
                                               through mapInPandas)
-      -> [optional] salted repartition by xxhash64(url) (skew defense when
-                                              input file layout is skewed)
+      -> [salt_partitions=N] repartition by xxhash64(url)
+                                             (skew defense when the input
+                                              file layout is skewed)
       -> mapInPandas(extraction kernel)      (one Arrow crossing per batch)
       -> latest-wins dedup per url           (window row_number, B5 semantics)
       -> extracted rows; audit rows split off
@@ -18,10 +19,11 @@ stage over the scan, and the url dedup shuffle happens AFTER extraction
 (up to 10 MB/row). Extraction is deterministic per row, so
 extract-then-dedup is equivalent to dedup-then-extract; the ~2% of
 duplicate urls cost two kernel invocations instead of shuffling the
-whole corpus. The pre-kernel salted repartition stays available for
-inputs whose *file* layout is skewed (one giant WARC); with a
-well-split columnar source, ``spark.sql.files.maxPartitionBytes``
-already balances scan tasks byte-wise.
+whole corpus. The pre-kernel salted repartition (``salt_partitions``)
+stays available for inputs whose *file* layout is skewed (one giant
+WARC); with a well-split columnar source,
+``spark.sql.files.maxPartitionBytes`` already balances scan tasks
+byte-wise.
 
 Validation mirrors the reference's upload gate: 10 MB cap and magic-byte
 sniff (/root/reference/app/routers/resume_ingestor_router.py:26-28,
@@ -187,17 +189,16 @@ def _kernel(batches: Iterator) -> Iterator:
 
 
 def extract_pages(pages: DataFrame, salt_partitions: int | None = None,
-                  dedup: bool = True,
-                  salt_input: bool = False) -> tuple[DataFrame, DataFrame]:
+                  dedup: bool = True) -> tuple[DataFrame, DataFrame]:
     """Run the extraction pipeline. Returns ``(extracted, rejected)`` —
     ``extracted`` in EXTRACT_SCHEMA (incl. per-row kernel errors), one
     row per url (latest warc_ts wins), ``rejected`` holds pre-kernel
     validation rejects.
 
-    ``salt_partitions`` sizes the post-kernel dedup shuffle (salted by
-    xxhash64(url)); ``salt_input=True`` additionally repartitions the
-    raw input before the kernel — only worth the byte movement when the
-    source file layout itself is skewed."""
+    ``salt_partitions=N`` repartitions the validated input into N
+    partitions by xxhash64(url) before the kernel — only worth the
+    byte movement when the source file layout itself is skewed.
+    ``None`` (the default) runs the kernel over the scan's own splits."""
     v = validate_pages(pages)
     ok = v.filter(F.col("reject_class").isNull())
     rejected = (v.filter(F.col("reject_class").isNotNull())
@@ -205,7 +206,7 @@ def extract_pages(pages: DataFrame, salt_partitions: int | None = None,
                         F.lit("rejected").alias("status"),
                         F.col("reject_class").alias("error_class"),
                         F.length("html").alias("n_bytes")))
-    if salt_input and salt_partitions:
+    if salt_partitions is not None:
         ok = ok.repartition(salt_partitions,
                             F.xxhash64(F.col("url"), F.lit(_SALT)))
     extracted = ok.select("url", "warc_ts", "html", "lang", "doc_type") \

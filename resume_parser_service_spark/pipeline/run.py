@@ -1,7 +1,7 @@
 """End-to-end resumable extraction job.
 
 Batch equivalent of the reference's full service lifecycle (SURVEY.md
-§3.1): scan -> dedup -> validate -> salted repartition -> kernel ->
+§3.1): scan -> dedup -> validate -> [salted repartition] -> kernel ->
 commit extracted + audit snapshots, resuming idempotently from the last
 committed snapshot (anti-join on processed urls). The audit table is
 the structured-event-log replacement
@@ -28,7 +28,6 @@ __all__ = ["run_extraction_job"]
 
 def run_extraction_job(spark: SparkSession, pages: DataFrame, out_root: str,
                        salt_partitions: int | None = None,
-                       salt_input: bool = False,
                        compact_after: int | None = None,
                        enrich: bool = False,
                        neardup_index: bool = False,
@@ -36,6 +35,9 @@ def run_extraction_job(spark: SparkSession, pages: DataFrame, out_root: str,
     """Run (or resume) extraction of ``pages`` into tables under
     ``out_root``: ``resumes_extracted`` + ``extraction_audit``.
     Re-running with the same input is a no-op (idempotent resume).
+
+    ``salt_partitions=N``: repartition the input into N partitions by
+    xxhash64(url) before the kernel (``extract.extract_pages``).
 
     ``compact_after=N``: when the extracted table accumulates >= N live
     delta snapshots, bin-pack-compact it and expire the replaced
@@ -83,8 +85,7 @@ def run_extraction_job(spark: SparkSession, pages: DataFrame, out_root: str,
     # resume point: urls already processed (ok, error or rejected)
     todo = audit_tbl.resume_filter(spark, pages)
 
-    extracted, rejected = extract_pages(todo, salt_partitions=salt_partitions,
-                                        dedup=True, salt_input=salt_input)
+    extracted, rejected = extract_pages(todo, salt_partitions=salt_partitions)
     # A9 residual validation: rows failing the reference's refinement
     # checks are routed to the audit table (status='invalid', class
     # InvalidResumeDataError — /root/reference/app/core/exceptions.py:113)

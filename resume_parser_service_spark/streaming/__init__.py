@@ -35,8 +35,8 @@ def stream_extraction(spark: SparkSession, input_dir: str, out_root: str,
 
     ``available_now=True`` drains everything currently present and
     stops (batch-like catch-up); ``False`` runs continuously on new
-    files. Extra ``job_kwargs`` (enrich, neardup_index,
-    canonicalize_urls, compact_after, salt_input) forward to
+    files. ``salt_partitions`` and the extra ``job_kwargs`` (enrich,
+    neardup_index, canonicalize_urls, compact_after) forward to
     ``run_extraction_job`` per micro-batch — the streaming path offers
     the same feature set as batch. Returns the StreamingQuery."""
     checkpoint_dir = checkpoint_dir or os.path.join(out_root, "_stream_ckpt")

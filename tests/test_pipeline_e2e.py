@@ -109,6 +109,29 @@ def test_idempotent_resume(spark, corpus):
     assert stats2["extracted"] == 0
 
 
+def test_salted_extraction_matches_unsalted(corpus):
+    """``salt_partitions`` alone turns salting on: the salted plan
+    repartitions by xxhash64(url) ahead of the kernel (the unsalted one
+    has no such exchange), and both return the same rows."""
+    import re
+
+    from resume_parser_service_spark.pipeline.extract import extract_pages
+    from resume_parser_service_spark.plans import formatted_plan
+    salt = re.compile(r"hashpartitioning\(xxhash64\(url#\d+, [^)]*\), 4\)")
+    salted, _ = extract_pages(corpus["pages"], salt_partitions=4)
+    plain, _ = extract_pages(corpus["pages"])
+    plan = formatted_plan(salted)
+    assert salt.search(plan)
+    assert not re.search(r"xxhash64\(url", formatted_plan(plain))
+    # the tree lists the salt exchange between the kernel and the scan
+    tree = plan[:plan.find("\n\n")]
+    assert "Exchange" in tree[tree.find("MapInPandas"):tree.find("Scan")]
+
+    def rows(df):
+        return sorted(df.drop("extract_ms").collect())
+    assert rows(salted) == rows(plain)
+
+
 def _incremental_stats(spark, corpus):
     """Run the incremental resume (snapshot 2) EXACTLY ONCE per corpus,
     memoized, so every test that needs snapshot 2 is self-sufficient
