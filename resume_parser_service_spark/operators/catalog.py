@@ -32,7 +32,6 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
-from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,25 +49,45 @@ PAST_50 = ("cube_event_counts", "distinct_langs", "paginated_scan",
            "filtered_count", "topk_largest_docs", "string_funcs",
            "math_funcs")
 
-_REGISTERED: dict[int, str] = {}  # id(spark) -> sf_dir registered
+# id(spark) -> (sf_dir, file stamps) of the last registration
+_REGISTERED: dict[int, tuple[str, tuple]] = {}
+
+
+def _stamp(path: str) -> tuple:
+    """``(st_mtime_ns, st_size)`` of a table file; for a directory table
+    (a Spark-written ``<table>.parquet/``), the sorted stamps of its
+    entries, so a rewrite of any part file shows."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return st.st_mtime_ns, st.st_size
+    return tuple(sorted((e.name, e.stat().st_mtime_ns, e.stat().st_size)
+                        for e in os.scandir(path)))
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register the testdata parquet tables as temp views (idempotent).
+    """Register the testdata parquet tables present in ``sf_dir`` as
+    temp views (idempotent).
 
+    A registration reads each file's footer (two schema-inference jobs
+    a table), so a repeat call with the same ``sf_dir`` and unchanged
+    files registers nothing: the cache holds, per session, the
+    ``sf_dir`` and the stamp (``(st_mtime_ns, st_size)``) of every
+    table file registered. A rewritten file changes its stamp and is
+    re-registered, where a kept view would serve its stale file index.
     The cache key is id(spark), which CPython can RECYCLE for a new
-    session after the old one is dropped — so a cache hit is only
-    trusted if the sentinel view actually exists in THIS session's
-    catalog (otherwise every query would fail TABLE_OR_VIEW_NOT_FOUND)."""
+    session after the old one is dropped — so a hit is only trusted if
+    the first table registered is a view in THIS session's catalog
+    (otherwise every query would fail TABLE_OR_VIEW_NOT_FOUND)."""
+    found = [(t, path) for t in TABLES
+             if os.path.exists(path := os.path.join(sf_dir, f"{t}.parquet"))]
+    state = (sf_dir, tuple(_stamp(path) for _, path in found))
     key = id(spark)
-    if (_REGISTERED.get(key) == sf_dir
-            and spark.catalog.tableExists(TABLES[0])):
+    if (found and _REGISTERED.get(key) == state
+            and spark.catalog.tableExists(found[0][0])):
         return
-    for t in TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(t)
-    _REGISTERED[key] = sf_dir
+    for t, path in found:
+        spark.read.parquet(path).createOrReplaceTempView(t)
+    _REGISTERED[key] = state
 
 
 def _sql(spark_sql: str, duck_sql: str | None = None):
@@ -290,88 +309,59 @@ def _doc_rows(docs: DataFrame, rows: Callable, cols: str,
         kernel, schema=", ".join(f"{n} {t}" for n, t in fields))
 
 
-class ShingleBase(NamedTuple):
-    """The distinct shingle rows, the multi-doc group lists and the df
-    cap ``grp`` was filtered with."""
-    sh: DataFrame
-    grp: DataFrame
-    max_df: int
+def _shingle_groups(spark: SparkSession, max_df: int = 100,
+                    with_n: bool = False) -> DataFrame:
+    """(shingle, ds): the df-capped multi-doc shingle groups of
+    ``documents``, ``ds`` the sorted member doc_ids — or, with
+    ``with_n``, sorted ``(doc_id, n)`` structs, ``n`` the member's
+    distinct-shingle count. The shared substrate of
+    ``ngram_jaccard_pairs`` and ``dedup_clusters``; the df-cap policy
+    stays in lockstep with ``_capped_shingles_cte`` (the SQL reference
+    / oracle source, which must emit identical rows).
 
-
-def _shingle_base(spark: SparkSession, sf_dir: str,
-                  max_df: int = 100) -> ShingleBase:
-    """(sh, grp, max_df): the distinct shingle rows and the df-capped
-    multi-doc group lists — the shared substrate of ``_capped_pairs``
-    and ``dedup_clusters``. Both frames are lazy: ``dedup_clusters``
-    checkpoints ``grp``, the one frame it reads twice, while
-    ``ngram_jaccard_pairs`` duplicates the kernel subtree per consumer
-    (a cheap map) so the whole query pipelines as ONE job with no
-    synchronization barriers — measured ~15% faster at sf1.0 than
-    checkpointing the shingle rows."""
-    sh = _doc_rows(
-        _spread(spark, spark.table("documents")),
-        lambda t: ({hash60(s.encode()) for s in shingles(t, 5)},),
-        "shingle bigint")
-    grp = (sh.groupBy("shingle")
-           .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-           .where((F.size("ds") >= 2) & (F.size("ds") <= max_df)))
-    return ShingleBase(sh, grp, max_df)
-
-
-def _capped_pairs(spark: SparkSession, sf_dir: str, max_df: int = 100,
-                  base: ShingleBase | None = None
-                  ) -> tuple[DataFrame, DataFrame]:
-    """(pairs, sizes) for ``ngram_jaccard_pairs``: pairs = (doc_a <
-    doc_b, n_shared) over shingles with document frequency <=
-    ``max_df``; sizes = per-doc distinct-shingle counts. The df-cap
-    policy stays in lockstep with ``_capped_shingles_cte`` (the SQL
-    reference / oracle source, which must emit identical rows).
-
-    Shape (guide §2.3/§2.4): the shingle rows come from the pandas
-    kernel above (pure map, no DISTINCT exchange, spread over the
-    cluster when the scan is under-split). Because the rows are
-    already distinct, a shingle's document frequency IS the size of
-    its doc list, so the df cap and the pair grouping collapse into
-    ONE exchange:
-    ``groupBy(shingle) -> sorted doc list -> 2 <= size <= max_df``
+    Shape (guide §2.3/§2.4): the kernel (pure map, no DISTINCT
+    exchange, spread over the cluster when the scan is under-split)
+    emits each document's distinct shingle hashes, every row carrying
+    the document's ``n``. Because the rows are already distinct, a
+    shingle's document frequency IS the size of its member list, so
+    the df cap and the grouping collapse into ONE exchange:
+    ``groupBy(shingle) -> sorted member list -> 2 <= size <= max_df``
     (the SQL reference paid three exchanges of the same rows: the
-    DISTINCT, the df-count aggregation, and the self-join sides).
-    Pairs then explode the a<b combinations of each (<= max_df) doc
-    list in-JVM and aggregate per pair.
+    DISTINCT, the df-count aggregation, and the self-join sides). The
+    groups are the kernel's only consumer, so one call runs the kernel
+    once: a per-doc size aggregation beside them would re-run it."""
+    def rows(text):
+        sh = {hash60(s.encode()) for s in shingles(text, 5)}
+        return sh, [len(sh)] * len(sh)
 
-    A ``base`` built with another df cap raises ``ValueError``: its
-    groups are already filtered, so ``max_df`` could not apply."""
-    if base is None:
-        base = _shingle_base(spark, sf_dir, max_df)
-    elif base.max_df != max_df:
-        raise ValueError(f"base was built with max_df={base.max_df}, "
-                         f"pairs asked for max_df={max_df}")
-    sh, grp = base.sh, base.grp
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    pair_expr = F.explode(F.flatten(F.transform(
-        "ds",
-        lambda a, i: F.transform(
-            F.slice("ds", i + F.lit(2), F.size("ds")),
-            lambda b: F.struct(a.alias("doc_a"), b.alias("doc_b"))))))
-    pairs = (grp.select(pair_expr.alias("p"))
-             .groupBy(F.col("p.doc_a").alias("doc_a"),
-                      F.col("p.doc_b").alias("doc_b"))
-             .agg(F.count("*").alias("n_shared")))
-    return pairs, sizes
+    sh = _doc_rows(_spread(spark, spark.table("documents")), rows,
+                   "shingle bigint, n int")
+    member = F.struct("doc_id", "n") if with_n else F.col("doc_id")
+    return (sh.groupBy("shingle")
+            .agg(F.sort_array(F.collect_list(member)).alias("ds"))
+            .where((F.size("ds") >= 2) & (F.size("ds") <= max_df)))
 
 
 def _q_ngram_jaccard_pandas(spark: SparkSession, sf_dir: str,
                             max_df: int = 100) -> DataFrame:
-    """ngram_jaccard_pairs on the shared fast builder — result-identical
-    to ``_ngram_jaccard_sql("spark")`` (the in-tree reference; DuckDB
-    oracle unchanged)."""
+    """ngram_jaccard_pairs on the shared group builder —
+    result-identical to ``_ngram_jaccard_sql("spark")`` (the in-tree
+    reference; DuckDB oracle unchanged). Pairs explode the a<b
+    combinations of each (<= ``max_df``) member list in-JVM, each pair
+    carrying both members' shingle counts ``na``/``nb`` for the Jaccard
+    denominator, and aggregate per pair: one kernel pass, no join."""
     register_views(spark, sf_dir)
-    pairs, sizes = _capped_pairs(spark, sf_dir, max_df)
-    sa = sizes.select(F.col("doc_id").alias("doc_a"),
-                      F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"),
-                      F.col("n").alias("nb"))
-    return (pairs.join(sa, "doc_a").join(sb, "doc_b")
+    pair = F.explode(F.flatten(F.transform(
+        "ds",
+        lambda a, i: F.transform(
+            F.slice("ds", i + F.lit(2), F.size("ds")),
+            lambda b: F.struct(a["doc_id"].alias("doc_a"),
+                               b["doc_id"].alias("doc_b"),
+                               a["n"].alias("na"), b["n"].alias("nb"))))))
+    return (_shingle_groups(spark, max_df, with_n=True)
+            .select(pair.alias("p")).select("p.*")
+            .groupBy("doc_a", "doc_b", "na", "nb")
+            .agg(F.count("*").alias("n_shared"))
             .select("doc_a", "doc_b", "n_shared",
                     F.round(F.col("n_shared").cast("double") /
                             (F.col("na") + F.col("nb") -
@@ -1124,7 +1114,8 @@ ORDER BY keeper_doc_id""")
     def _run_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         from .incremental import band_signatures
         register_views(spark, sf_dir)
-        return band_signatures(spark, spark.table("documents"))
+        return (band_signatures(spark, spark.table("documents"))
+                .orderBy("doc_id", "band_id"))
     from .incremental import band_signatures_sql as _bands_sql
     c["band_signatures"] = (_run_bands, _bands_sql("duck"))
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import _capped_shingles_cte, _shingle_base, register_views
+from .catalog import _capped_shingles_cte, _shingle_groups, register_views
 
 __all__ = ["cluster_queries", "cluster_oracles",
            "connected_components_lsss"]
@@ -112,7 +112,7 @@ def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # grouping once, and the size gate's member count rides its job.
     # "or 0": SUM of no rows is NULL
     obs = Observation()
-    grp = (_shingle_base(spark, sf_dir).grp
+    grp = (_shingle_groups(spark)
            .observe(obs, F.sum(F.size("ds")).alias("n"))
            .localCheckpoint(eager=True))
     n_members = int(obs.get["n"] or 0)

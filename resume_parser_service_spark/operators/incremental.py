@@ -74,7 +74,8 @@ ORDER BY doc_id, band_id
 
 def band_signatures(spark: SparkSession, docs: DataFrame,
                     n_hashes: int = 8, rows_per_band: int = 2) -> DataFrame:
-    """Band signatures for an arbitrary (doc_id, text) DataFrame.
+    """Band signatures for an arbitrary (doc_id, text) DataFrame, in no
+    particular order.
 
     One map stage (``catalog._doc_rows``): per doc the distinct
     shingle set, its ``n_hashes`` seeded MinHash minima
@@ -83,8 +84,18 @@ def band_signatures(spark: SparkSession, docs: DataFrame,
     reference and DuckDB oracle source) paid a DISTINCT exchange, a
     per-doc aggregation exchange, and ~n_hashes JVM md5-expression
     evaluations per shingle fanned out across ``n_bands`` inlined union
-    branches; this pays zero exchanges before the final ordering
-    (measured 4.3 s -> sub-second at sf1.0)."""
+    branches; this pays one exchange, of the band rows (measured
+    4.3 s -> sub-second at sf1.0).
+
+    The rows come back unordered, hash-partitioned by ``doc_id``. The
+    exchange is what lets adaptive execution coalesce a small batch's
+    bands into few partitions, so an index commit writes few files
+    (without it, one file per kernel task).
+    It also keeps a sort off the kernel: an ``orderBy`` right above
+    it re-ran the kernel for its range-partition sample, while above
+    the exchange the sample reads the shuffled band rows. The index
+    commit, the collision join and the streaming consumer need no
+    order; the catalog entry sorts."""
     if n_hashes % rows_per_band:
         raise ValueError("n_hashes must divide into bands evenly")
     seeds = [f"s{i}#".encode() for i in range(n_hashes)]
@@ -102,7 +113,7 @@ def band_signatures(spark: SparkSession, docs: DataFrame,
 
     return (_doc_rows(_spread(spark, docs), rows,
                       "band_id int, band_hash bigint")
-            .orderBy("doc_id", "band_id"))
+            .repartition("doc_id"))
 
 
 def _collisions(new_bands: DataFrame,

@@ -172,25 +172,29 @@ def test_local_union_find_agrees_with_lsss_and_oracle(spark, monkeypatch):
     assert local == lsss == oracle
 
 
-def test_capped_pairs_base_carries_its_df_cap(spark, tmp_path):
-    """A prebuilt base fixes the df cap: asking its pairs for another
-    cap fails loudly instead of silently keeping the base's."""
+def test_shingle_groups_apply_their_df_cap(spark, tmp_path):
+    """The df cap a group list is built with is the one its pairs
+    reflect: the three shingles all 12 docs share form no group under a
+    cap of 5 and every pair under a cap of 20, each group member and
+    each pair carrying the docs' distinct-shingle counts."""
     from resume_parser_service_spark.operators.catalog import (
-        _REGISTERED, _capped_pairs, _shingle_base, register_views)
+        _REGISTERED, _q_ngram_jaccard_pandas, _shingle_groups,
+        register_views)
     hot = "copyright footer all rights reserved"  # df = 12
     rows = [(i, f"unique{i} words here {hot}") for i in range(12)]
     sf_dir = _write_docs(spark, tmp_path, rows)
     _REGISTERED.pop(id(spark), None)
     register_views(spark, sf_dir)
     try:
-        base = _shingle_base(spark, sf_dir, max_df=5)
-        assert base.max_df == 5
-        with pytest.raises(ValueError, match="max_df=5"):
-            _capped_pairs(spark, sf_dir, max_df=100, base=base)
-        pairs, _sizes = _capped_pairs(spark, sf_dir, max_df=5, base=base)
-        assert pairs.count() == 0  # the hot shingle is over the cap
-        pairs, _sizes = _capped_pairs(spark, sf_dir, max_df=20)
-        assert pairs.count() == 12 * 11 // 2
+        assert _shingle_groups(spark, max_df=5).count() == 0
+        assert _q_ngram_jaccard_pandas(spark, sf_dir, max_df=5).count() == 0
+        groups = _shingle_groups(spark, max_df=20, with_n=True).collect()
+        assert [[(m.doc_id, m.n) for m in g.ds] for g in groups] == [
+            [(i, 4) for i in range(12)]] * 3
+        pairs = _q_ngram_jaccard_pandas(spark, sf_dir, max_df=20).collect()
+        assert len(pairs) == 12 * 11 // 2
+        # 3 shared of 4 + 4 distinct shingles: 3 / 5
+        assert {(p.n_shared, p.jaccard) for p in pairs} == {(3, 0.6)}
     finally:
         _REGISTERED.pop(id(spark), None)
 

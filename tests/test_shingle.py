@@ -45,3 +45,10 @@ def test_minhash_is_min_of_hash60():
     data = {f"tok{i} café {i * 7}".encode() for i in range(300)} | {b""}
     assert minhash(data, seeds) == [
         min(hash60(seed + d) for d in data) for seed in seeds]
+
+
+def test_minhash_of_empty_set_raises():
+    """Like ``min`` of no values: an empty set has no minimum, so no
+    sentinel value may come back as a signature."""
+    with pytest.raises(ValueError, match="empty"):
+        minhash(set(), [b"s0#"])
