@@ -4,9 +4,10 @@
 
 Both readers must agree byte-for-byte on what a table's manifest chain
 means — which files are canonical, which snapshots a compaction
-replaced, when an expired snapshot poisons a range, and when a
-re-stamping compaction makes an incremental read unsafe. Keeping the
-rules here (module-level, dependency-free functions — picklable, so the
+replaced, when an expired snapshot poisons a range, when a
+re-stamping compaction makes an incremental read unsafe, and which
+Spark schema a set of snapshots is read under. Keeping the
+rules here (module-level pure functions — picklable, so the
 Python DataSource can ship them to executors) means they cannot drift
 apart.
 """
@@ -17,8 +18,10 @@ import json
 import os
 import re
 
+from pyspark.sql.types import StructField, StructType
+
 __all__ = ["list_snapshots", "resolve_live", "live_snapshots",
-           "check_delta_range"]
+           "check_delta_range", "read_schema"]
 
 
 def list_snapshots(root: str) -> list[dict]:
@@ -79,3 +82,35 @@ def check_delta_range(snaps: list[dict], from_version: int,
                 f"{s['replaces']} — row history before it is collapsed "
                 f"(compact with mode='append' or keep_versions>1 to "
                 f"keep the changelog readable)")
+
+
+def _nullable(t):
+    """A schema's JSON with every nullability flag set: Spark reads
+    parquet files as nullable whatever the writer declared."""
+    if isinstance(t, dict):
+        return {k: True if k in ("nullable", "containsNull",
+                                 "valueContainsNull") else _nullable(v)
+                for k, v in t.items()}
+    if isinstance(t, list):
+        return [_nullable(v) for v in t]
+    return t
+
+
+def read_schema(snaps: list[dict]) -> StructType:
+    """The Spark schema that reads ``snaps`` together: the schema each
+    manifest recorded at commit, merged by column name in snapshot
+    order — a column first seen in a later snapshot is appended and
+    reads as NULL in the older ones. A column recorded under two types
+    raises ``ValueError`` naming it (nullability is not a difference;
+    nested struct fields are compared whole, not merged)."""
+    fields: dict[str, StructField] = {}
+    for s in snaps:
+        for f in StructType.fromJson(_nullable(s["schema"])):
+            seen = fields.setdefault(f.name, f)
+            if seen.dataType != f.dataType:
+                raise ValueError(
+                    f"column {f.name!r} is "
+                    f"{seen.dataType.simpleString()} in an earlier "
+                    f"snapshot but {f.dataType.simpleString()} in "
+                    f"snapshot {s['id']}")
+    return StructType(list(fields.values()))

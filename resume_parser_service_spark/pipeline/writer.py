@@ -5,6 +5,8 @@ by a minimal snapshot log: each commit writes parquet under
 ``data/snap-<id>/`` (write-then-manifest, atomic via ``os.replace``),
 and a JSON manifest chain gives snapshot isolation, time travel
 (SURVEY.md B12) and the idempotent resume anti-join (north rule).
+Each manifest records its snapshot's Spark schema; reads scan under it
+(``manifests.read_schema``) and never infer one.
 On a real cluster this class is swapped for
 ``df.writeTo(tbl)`` / ``MERGE INTO`` on Iceberg — call sites only use
 ``commit`` / ``read`` / ``committed_keys``.
@@ -22,6 +24,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType
 
 from . import manifests as _manifests
 
@@ -109,40 +112,27 @@ class SnapshotTable:
 
     _INTERNAL_COLS = ("_snapshot_id", "_deleted")
 
-    def _current_columns(self) -> dict[str, str] | None:
-        """Current logical schema {column: spark_dtype}: one parquet
-        footer of the last live snapshot (driver-side pyarrow, no Spark
-        job) transformed through the ops recorded after it. None when
-        no data or footer exists yet (validation is then skipped)."""
-        import pyarrow.parquet as pq
+    def _current_columns(self) -> dict[str, DataType] | None:
+        """Current logical schema {column: Spark type}: the schema the
+        last live snapshot's manifest recorded, transformed through the
+        ops declared after it. None before the first commit (validation
+        is then skipped)."""
         live = self.live_snapshots()
-        last = live[-1] if live else {}
-        if not last.get("files"):
+        if not live:
             return None
-        try:
-            schema = pq.ParquetFile(os.path.join(
-                self.root, last["files"][0]["path"])).schema_arrow
-        except Exception:
-            return None
-        _ARROW2SPARK = {"int8": "tinyint", "int16": "smallint",
-                        "int32": "int", "int64": "long",
-                        "float": "float", "halffloat": "float",
-                        "double": "double", "string": "string",
-                        "large_string": "string", "bool": "boolean",
-                        "binary": "binary", "large_binary": "binary"}
-        cols = {f.name: _ARROW2SPARK.get(str(f.type), str(f.type))
-                for f in schema}
+        last = live[-1]
+        cols = {f.name: f.dataType for f in _manifests.read_schema([last])}
         for op in self._evolution():
-            if op["version"] <= last.get("schema_version", 0):
+            if op["version"] <= last["schema_version"]:
                 continue
             if op["op"] == "rename" and op["old"] in cols:
                 cols[op["new"]] = cols.pop(op["old"])
             elif op["op"] == "drop":
                 cols.pop(op["name"], None)
             elif op["op"] == "widen" and op["name"] in cols:
-                cols[op["name"]] = op["type"]
-            elif op["op"] == "add":
-                cols.setdefault(op["name"], op["type"])
+                cols[op["name"]] = DataType.fromDDL(op["type"])
+            elif op["op"] == "add" and op["name"] not in cols:
+                cols[op["name"]] = DataType.fromDDL(op["type"])
         return cols
 
     def add_column(self, name: str, dtype: str, default=None) -> int:
@@ -193,22 +183,23 @@ class SnapshotTable:
         if name == self.key_col or name in self._INTERNAL_COLS:
             raise ValueError(f"cannot widen {name!r}")
         # only Iceberg-legal promotions: a narrowing "widen" would
-        # silently corrupt historical values under Spark cast
-        _WIDENINGS = {"long": {"tinyint", "smallint", "int"},
-                      "bigint": {"tinyint", "smallint", "int"},
+        # silently corrupt historical values under Spark cast. Parsed
+        # types are compared, so 'long' and 'bigint' are one type
+        _WIDENINGS = {"bigint": {"tinyint", "smallint", "int"},
                       "int": {"tinyint", "smallint"},
                       "double": {"float"}}
-        if dtype not in _WIDENINGS:
+        target = DataType.fromDDL(dtype).simpleString()
+        if target not in _WIDENINGS:
             raise ValueError(f"{dtype!r} is not a widening target "
                              f"(int->long, float->double)")
         cols = self._current_columns()
         if cols is not None:
             if name not in cols:
                 raise ValueError(f"no column {name!r} to widen")
-            src = cols[name]
-            if src not in _WIDENINGS[dtype] and src != dtype:
+            src = cols[name].simpleString()
+            if src not in _WIDENINGS[target] and src != target:
                 raise ValueError(
-                    f"cannot widen {name!r} from {src} to {dtype}")
+                    f"cannot widen {name!r} from {src} to {target}")
         return self._record_evolution(
             {"op": "widen", "name": name, "type": dtype})
 
@@ -285,6 +276,7 @@ class SnapshotTable:
         manifest = {"id": snap_id, "parent": last["id"] if last else None,
                     "path": rel, "committed_at": time.time(),
                     "schema_version": len(self._evolution()),
+                    "schema": out.schema.jsonValue(),
                     "files": self._file_stats(path)}
         if replaces:
             manifest["replaces"] = sorted(replaces)
@@ -379,22 +371,27 @@ class SnapshotTable:
               to_version: int | None = None) -> DataFrame | None:
         """The one parquet scan of the table, over ``[(snapshot,
         paths)]`` — whole snapshot directories or manifest-pruned data
-        files. Without declared evolution ops it is one multi-path scan
-        (mergeSchema covers the implicit additive case: columns missing
-        from older snapshots read as NULL, Iceberg semantics); with
-        them each group is read on its own and transformed from ITS
-        schema version to ``to_version`` (None = current) before the
-        union. None for no groups."""
+        files — under the schemas the manifests recorded. Without
+        declared evolution ops it is one multi-path scan under the
+        groups' merged schema (columns missing from older snapshots
+        read as NULL, Iceberg semantics); with them each group is read
+        under its own schema and transformed from ITS schema version
+        to ``to_version`` (None = current) before the union. None for
+        no groups."""
         if not groups:
             return None
         ops = self._evolution()  # loaded ONCE per read
-        reader = spark.read.option("mergeSchema", "true")
+
+        def scan(gs):
+            schema = _manifests.read_schema([s for s, _ps in gs])
+            return spark.read.schema(schema).parquet(
+                *[p for _s, ps in gs for p in ps])
         if not ops:
-            return reader.parquet(*[p for _s, ps in groups for p in ps])
+            return scan(groups)
         df = None
         for s, paths in groups:
-            part = self._apply_evolution(reader.parquet(*paths),
-                                         s.get("schema_version", 0), ops,
+            part = self._apply_evolution(scan([(s, paths)]),
+                                         s["schema_version"], ops,
                                          to_version)
             df = part if df is None else df.unionByName(
                 part, allowMissingColumns=True)

@@ -25,7 +25,7 @@ Scope guards (documented, fail-loud): ranges that cross a re-stamping
 compaction raise (history collapsed — same rule as ``read_changes``);
 tables with declared schema-evolution ops raise (the batch reader
 transforms old snapshots per-version; the streaming source serves the
-written schema, additive-null only).
+schema the last snapshot's manifest recorded, additive-null only).
 """
 
 from __future__ import annotations
@@ -36,39 +36,19 @@ from typing import Iterator, Sequence
 
 from pyspark.sql.datasource import (DataSource, DataSourceStreamReader,
                                     InputPartition)
+from pyspark.sql.types import StructType
 
 # Manifest resolution is SHARED with the batch reader (SnapshotTable)
 # via pipeline.manifests — module-level pure functions, so the
 # DataSource stays picklable and the stream can never diverge from the
 # batch reader on what the manifest chain means.
-from ..pipeline.manifests import check_delta_range, live_snapshots
+from ..pipeline.manifests import (check_delta_range, live_snapshots,
+                                  read_schema)
 
 __all__ = ["SnapshotCDCDataSource", "stream_changes",
            "stream_neardup_index", "maintain_index_until_current"]
 
 _INTERNAL = ("_deleted", "_snapshot_id")
-
-
-def _arrow_to_ddl(t) -> str:
-    """Arrow type -> Spark DDL type for the column set SnapshotTable
-    writes (scalars + arrays of scalars)."""
-    import pyarrow as pa
-    prim = {"int8": "tinyint", "int16": "smallint", "int32": "int",
-            "int64": "long", "float": "float", "halffloat": "float",
-            "double": "double", "string": "string",
-            "large_string": "string", "bool": "boolean",
-            "binary": "binary", "large_binary": "binary"}
-    if pa.types.is_list(t) or pa.types.is_large_list(t):
-        return f"array<{_arrow_to_ddl(t.value_type)}>"
-    if pa.types.is_timestamp(t):
-        return "timestamp"
-    if pa.types.is_struct(t):
-        inner = ", ".join(f"{f.name}: {_arrow_to_ddl(f.type)}" for f in t)
-        return f"struct<{inner}>"
-    name = str(t)
-    if name not in prim:
-        raise ValueError(f"snapshot_cdc: unsupported column type {name}")
-    return prim[name]
 
 
 class _CDCPartition(InputPartition):
@@ -92,7 +72,7 @@ class _CDCStreamReader(DataSourceStreamReader):
         # (the executor's Arrow batch would no longer match and fail
         # with an opaque conversion error instead of serving nulls).
         self.columns = (columns if columns is not None
-                        else [c for c, _t in _schema_columns(root)])
+                        else _schema(root).fieldNames())
 
     # ------------------------------------------------------- offsets --
     def initialOffset(self) -> dict:
@@ -114,13 +94,7 @@ class _CDCStreamReader(DataSourceStreamReader):
         # op declared mid-stream would otherwise silently serve NULLs
         # for the renamed column via read()'s file-predates-column
         # branch (that branch exists for implicit additive columns only)
-        if os.path.exists(os.path.join(self.root, "_schema",
-                                       "evolution.json")):
-            raise ValueError(
-                "snapshot_cdc: schema-evolution ops were declared "
-                "mid-stream; the streaming changelog serves the written "
-                "schema only — use the batch read_changes for evolved "
-                "tables")
+        _refuse_evolved(self.root)
         snaps = [s for s in live_snapshots(self.root, to_v)
                  if s["id"] > from_v]
         check_delta_range(snaps, from_v, label="stream changes")
@@ -181,30 +155,25 @@ class _CDCStreamReader(DataSourceStreamReader):
             yield batch
 
 
-def _schema_columns(root: str) -> list[tuple[str, str]]:
-    """(name, ddl_type) pairs: the last live snapshot's parquet footer
-    minus internal columns, plus the two CDC columns. Declared
-    schema-evolution ops are out of streaming scope — fail loud."""
-    import pyarrow.parquet as pq
-    evo = os.path.join(root, "_schema", "evolution.json")
-    if os.path.exists(evo):
+def _refuse_evolved(root: str) -> None:
+    """Declared schema-evolution ops are out of streaming scope."""
+    if os.path.exists(os.path.join(root, "_schema", "evolution.json")):
         raise ValueError(
             "snapshot_cdc: table has declared schema-evolution ops; "
             "the streaming changelog serves the written schema only — "
             "use the batch read_changes for evolved tables")
+
+
+def _schema(root: str) -> StructType:
+    """The stream's schema: the one the last live snapshot's manifest
+    recorded, minus internal columns, plus the two CDC columns."""
+    _refuse_evolved(root)
     live = live_snapshots(root)
     if not live:
         raise ValueError(f"snapshot_cdc: no snapshots under {root}")
-    if not live[-1].get("files"):
-        raise ValueError(f"snapshot_cdc: snapshot {live[-1]['id']} has "
-                         f"no data files")
-    schema = pq.ParquetFile(
-        os.path.join(root, live[-1]["files"][0]["path"])).schema_arrow
-    cols = [(f.name, _arrow_to_ddl(f.type)) for f in schema
-            if f.name not in _INTERNAL]
-    cols.append(("_commit_version", "long"))
-    cols.append(("_change_type", "string"))
-    return cols
+    return (StructType([f for f in read_schema(live[-1:])
+                        if f.name not in _INTERNAL])
+            .add("_commit_version", "long").add("_change_type", "string"))
 
 
 class SnapshotCDCDataSource(DataSource):
@@ -217,22 +186,20 @@ class SnapshotCDCDataSource(DataSource):
     def name(cls) -> str:
         return "snapshot_cdc"
 
-    def schema(self) -> str:
+    def schema(self) -> StructType:
         root = self.options.get("path")
         if not root:
             raise ValueError("snapshot_cdc requires option 'path'")
-        return ", ".join(f"{c} {t}" for c, t in _schema_columns(root))
+        return _schema(root)
 
     def streamReader(self, schema) -> _CDCStreamReader:
         # `schema` is the StructType Catalyst planned the query with —
         # hand its field names to the reader so served batches always
         # match the planned schema exactly (see _CDCStreamReader.__init__)
-        cols = ([f.name for f in schema.fields]
-                if hasattr(schema, "fields") else None)
         return _CDCStreamReader(
             self.options["path"],
             int(self.options.get("startingVersion", 0)),
-            columns=cols)
+            columns=schema.fieldNames())
 
 
 def stream_changes(spark, root: str, starting_version: int = 0):

@@ -309,6 +309,27 @@ def test_run_extraction_job_releases_its_caches(spark, tmp_path):
         assert set(jsc.getPersistentRDDs().keys()) <= before
 
 
+def test_ingest_batch_job_count(spark, tmp_path):
+    """Ratchet on the Spark jobs of one steady ingest batch: the third
+    enrich + neardup-index batch into one root, 20 new docs, no
+    compaction. Table reads scan under the manifests' recorded schemas
+    and infer none."""
+    out = str(tmp_path / "out")
+    sc = spark.sparkContext
+    for n_docs in (20, 40):
+        run_extraction_job(spark, build_pages_df(spark, n_docs), out,
+                           enrich=True, neardup_index=True)
+    group = "test_ingest_batch_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        stats = run_extraction_job(spark, build_pages_df(spark, 60), out,
+                                   enrich=True, neardup_index=True)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert stats["extracted"] == 20
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 29
+
+
 def test_canonicalize_urls_collapses_variants(spark, tmp_path):
     """canonicalize_urls=True: tracking-param/case variants of one page
     collapse to a single committed row under the canonical key, and a

@@ -55,6 +55,24 @@ def test_stream_preserves_vector_column(spark, tmp_path):
     assert row["vector"] == [1.5, -2.0]
 
 
+def test_stream_schema_is_recorded_and_nullable(spark, tmp_path):
+    """The stream plans with the schema the last snapshot's manifest
+    recorded, every column nullable — a column a writer declared NOT
+    NULL can still be missing from older files, which serve it as
+    nulls."""
+    from pyspark.sql import functions as F
+    tbl = SnapshotTable(str(tmp_path / "t"))
+    tbl.commit(_df(spark, [("u1", "a", [1.0])]).withColumn("n", F.lit(1)))
+    df = stream_changes(spark, str(tmp_path / "t"))
+    assert [(f.name, f.dataType.simpleString(), f.nullable)
+            for f in df.schema] == [
+        ("url", "string", True), ("text", "string", True),
+        ("vector", "array<double>", True), ("n", "int", True),
+        ("_commit_version", "bigint", True),
+        ("_change_type", "string", True)]
+    assert df.schema["vector"].dataType.containsNull
+
+
 def test_checkpointed_restart_serves_only_new_snapshots(spark, tmp_path):
     """The offset survives in the checkpoint: a second availableNow
     pass after new commits appends ONLY the new snapshots' rows

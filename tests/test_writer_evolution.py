@@ -64,6 +64,57 @@ def test_widen_column_casts_old_snapshots(spark, tmp_path):
     assert {r["n"] for r in cur.collect()} == {1, 2**40}
 
 
+def test_widen_judges_types_not_spellings(spark, tmp_path):
+    """'long' and 'bigint' name one Spark type: either spelling widens
+    an int column, is accepted on a column that is already bigint, and
+    is refused on a string column."""
+    for spelling in ("long", "bigint"):
+        t = SnapshotTable(str(tmp_path / spelling))
+        t.commit(spark.createDataFrame([("a", 1, 7, "x")],
+                                       "url string, n int, m long, s string"))
+        t.widen_column("n", spelling)
+        t.widen_column("m", spelling)
+        t.commit(spark.createDataFrame([("b", 2**40, 8, "y")],
+                                       "url string, n long, m long, s string"))
+        t.widen_column("n", spelling)
+        with pytest.raises(ValueError, match="from string to bigint"):
+            t.widen_column("s", spelling)
+        cur = t.read_current(spark)
+        assert dict(cur.dtypes)["n"] == "bigint"
+        assert {r["n"] for r in cur.collect()} == {1, 2**40}
+
+
+def test_undeclared_type_change_names_the_column(spark, tmp_path):
+    """Two snapshots that record one column under two types, with no
+    declared op between them, cannot be read together: the read raises
+    and names the column."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.commit(spark.createDataFrame([("a", 1)], "url string, v int"))
+    t.commit(spark.createDataFrame([("b", "x")], "url string, v string"))
+    with pytest.raises(ValueError, match="column 'v' is int .* string"):
+        t.read(spark)
+    # each snapshot alone still reads
+    assert t.read_changes(spark, 1).first()["v"] == "x"
+
+
+def test_undeclared_added_column_reads_null_in_older_snapshots(spark,
+                                                              tmp_path):
+    """A column added without a declared op reads as NULL in older
+    snapshots; it is appended after the columns of the snapshots that
+    lack it, and a read of the later snapshot alone keeps its order."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.commit(spark.createDataFrame([("u1", 1, "x")],
+                                   "url string, a int, text string"))
+    t.commit(spark.createDataFrame([("u2", "B", 2, "y")],
+                                   "url string, b string, a int, text string"))
+    assert t.read(spark).columns == \
+        ["url", "a", "text", "_snapshot_id", "_deleted", "b"]
+    assert {r["url"]: r["b"] for r in t.read_current(spark).collect()} == \
+        {"u1": None, "u2": "B"}
+    assert t.read_changes(spark, 1).columns == \
+        ["url", "b", "a", "text", "_commit_version", "_change_type"]
+
+
 def test_chained_ops_apply_in_order(spark, tmp_path):
     t = SnapshotTable(str(tmp_path / "t"))
     t.commit(_mkdf(spark, [{"url": "a", "s": 1}]))

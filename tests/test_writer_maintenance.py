@@ -348,10 +348,12 @@ def _warm_jobs(spark, group, fn):
 
 @pytest.mark.parametrize("rename", [False, True])
 def test_table_read_job_count(spark, tmp_path, rename):
-    """Ratchet on the Spark jobs of key-scoped and changelog reads of 4
-    snapshots of 3 data files each: a point lookup runs at most 3 jobs
-    and a read_changes 2 — 5 and 3 once a declared rename makes every
-    snapshot its own scan."""
+    """Ratchet on the Spark jobs of key-scoped, changelog and current
+    reads of 4 snapshots of 3 data files each: reads scan under the
+    schemas the manifests recorded, so no read infers one, and a
+    declared rename (every snapshot its own scan) costs no extra job —
+    a point lookup runs at most 2 jobs, a read_changes 1 and a
+    read_current 2, with or without the rename."""
     tbl = SnapshotTable(str(tmp_path / "t"))
     col = "text"
     for i in range(4):
@@ -368,8 +370,12 @@ def test_table_read_job_count(spark, tmp_path, rename):
                         lambda: tbl.point_lookup(spark, "u11").collect())
     changes = _warm_jobs(spark, f"{group}_changes",
                          lambda: tbl.read_changes(spark, 2).collect())
+    current = _warm_jobs(spark, f"{group}_current",
+                         lambda: tbl.read_current(spark).collect())
     assert [tuple(r) for r in tbl.point_lookup(spark, "u11").collect()] \
         == [("u11", "v2", [1.0], 3)]
     assert tbl.read_changes(spark, 2).count() == 24
-    assert lookup <= (5 if rename else 3)
-    assert changes <= (3 if rename else 2)
+    assert tbl.read_current(spark).count() == 27
+    assert lookup <= 2
+    assert changes <= 1
+    assert current <= 2
